@@ -16,6 +16,7 @@ Iceberg catalog validates the swap.
 Layout:
     <warehouse>/<table>/manifest.json
     <warehouse>/<table>/s0000/  (parquet dir per snapshot)
+    <warehouse>/_qcache/<key>.json  (query-result cache, one record per key)
 
 A snapshot is committed atomically by writing the parquet dir first and
 renaming a temp manifest over the old one last. `input_snapshot` records
@@ -33,6 +34,22 @@ import tempfile
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: warehouse subdirectory of the query-result cache: one JSON record per
+#: key, so a lookup reads one file whatever the number of cached queries
+CACHE_DIR = "_qcache"
+
+
+def _replace_json(path: str, obj: Any, indent: int | None = 1) -> None:
+    """Write `obj` as JSON to `path` atomically: a temp file in the same
+    directory, then os.replace — a reader sees the old file or the new
+    one, never a torn write."""
+    d = os.path.dirname(path)
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        json.dump(obj, f, indent=indent)
+    os.replace(tmp, path)
 
 
 class TableIO:
@@ -52,12 +69,24 @@ class TableIO:
             return json.load(f)
 
     def _store_manifest(self, table: str, manifest: dict[str, Any]) -> None:
-        tdir = os.path.join(self.warehouse, table)
-        os.makedirs(tdir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=tdir, suffix=".manifest")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))
+        _replace_json(self._manifest_path(table), manifest)
+
+    # -- query-result cache ------------------------------------------------
+    def _cache_path(self, key: str) -> str:
+        return os.path.join(self.warehouse, CACHE_DIR, f"{key}.json")
+
+    def cache_get(self, key: str) -> dict[str, Any] | None:
+        """The JSON record stored under `key`, or None."""
+        try:
+            with open(self._cache_path(key)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def cache_put(self, key: str, record: dict[str, Any]) -> None:
+        """Store `record` under `key`, replacing any earlier record in
+        place (the key names the file)."""
+        _replace_json(self._cache_path(key), record, indent=None)
 
     # -- commits -----------------------------------------------------------
     def commit(
@@ -173,10 +202,7 @@ class TableIO:
         txns.append(
             {"id": txn_id, "tables": staged, "metadata": metadata or {}}
         )
-        fd, tmp = tempfile.mkstemp(dir=self.warehouse, suffix=".txn")
-        with os.fdopen(fd, "w") as f:
-            json.dump(txns, f, indent=1)
-        os.replace(tmp, self._txn_path())  # <- the commit point
+        _replace_json(self._txn_path(), txns)  # <- the commit point
         self._roll_forward(txns[-1])
         return txn_id
 
@@ -415,7 +441,7 @@ class TableIO:
         self, table: str, snapshot: str | None = None
     ) -> dict[str, Any]:
         """Metadata dict recorded at commit time (e.g. IVF centroids,
-        cache timestamps) for the given — default current — snapshot."""
+        BM25 corpus scalars) for the given — default current — snapshot."""
         manifest = self._load_manifest(table)
         snap_id = snapshot or manifest["current"]
         if snap_id is None:
@@ -524,10 +550,15 @@ class TableIO:
         )
 
     def clear_all(self) -> None:
-        """Drop every table in the warehouse (reference clear_all,
-        kg_builder.py:175-187)."""
+        """Drop every table in the warehouse and the query-result cache
+        (reference clear_all, kg_builder.py:175-187). The cache goes too:
+        a rebuilt warehouse reuses snapshot ids, so a record keyed on the
+        old `chunks` snapshot would be served for the new corpus."""
         for table in self.tables():
             self.drop(table)
+        cache_dir = os.path.join(self.warehouse, CACHE_DIR)
+        if os.path.exists(cache_dir):
+            shutil.rmtree(cache_dir)
 
     def find_snapshot(self, table: str, input_snapshot: str | None) -> str | None:
         """Resume check: a committed snapshot whose lineage matches the

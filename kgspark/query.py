@@ -13,7 +13,8 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from . import KEYWORD_WEIGHT, MAX_DEPTH, TOP_K, VECTOR_WEIGHT
 
@@ -117,17 +118,14 @@ def keyword_scores(
     """Keyword top-k (reference O20, elasticsearch_store.py:138-178),
     as summed term frequency of the query's tokens; for the reference's
     `fuzziness: AUTO` behavior use keyword_scores_fuzzy (index path).
-    Inverted-index shape: explode(split(lower(text))) -> term join ->
-    tf sum. Term list is tiny -> broadcast join."""
+    Inverted-index shape: explode(split(lower(text))) -> term filter ->
+    tf sum. The term list is tiny, so it is an isin literal rather than
+    a joined frame."""
     terms = query_terms(query)
     if not terms:
         return chunks.select(
             F.col(id_col), F.lit(0.0).alias("score")
         ).limit(0)
-    spark = chunks.sparkSession
-    terms_df = F.broadcast(
-        spark.createDataFrame([(t,) for t in set(terms)], "term string")
-    )
     tokens = chunks.select(
         F.col(id_col),
         F.explode(
@@ -137,7 +135,7 @@ def keyword_scores(
         ).alias("term"),
     )
     return (
-        tokens.join(terms_df, "term")
+        tokens.filter(F.col("term").isin(terms))
         .groupBy(id_col)
         .agg(F.count("*").cast("double").alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
@@ -501,16 +499,13 @@ def entities_from_chunks(
 
     Faithful quirk: the var-length pattern ends at an entity, so only
     odd hop counts can match — with the default max_depth=2 the result
-    equals depth 1 (SURVEY.md §3.2-4). Implemented as iterative frontier
-    hash-joins (BFS), the same shape as CC.
+    equals depth 1 (SURVEY.md §3.2-4). The seed is an isin filter on
+    chunk_id, pushed into the mentions scan; deeper hops are iterative
+    frontier hash-joins (BFS), the same shape as CC.
     """
-    spark = mentions.sparkSession
-    frontier_chunks = F.broadcast(
-        spark.createDataFrame([(c,) for c in chunk_ids], "chunk_id string")
-    )
     ment = mentions.select("chunk_id", "name")
     entities = (
-        ment.join(frontier_chunks, "chunk_id").select("name").distinct()
+        ment.filter(F.col("chunk_id").isin(chunk_ids)).select("name").distinct()
         .withColumn("hops", F.lit(1))
     )
     depth = 1
@@ -617,9 +612,10 @@ def related_entities(
         # shuffle (and, upstream, the edge materialization)
         .localCheckpoint(eager=True)
     )
-    spark = kg_edges.sparkSession
-    frontier = spark.createDataFrame([(entity_name,)], "a string").withColumn(
-        "path", F.array().cast("array<string>")
+    # the seed row is made in the JVM: no driver-side list to pickle
+    frontier = kg_edges.sparkSession.range(1, numPartitions=1).select(
+        F.lit(entity_name).alias("a"),
+        F.array().cast("array<string>").alias("path"),
     )
     seen = frontier.select("a")
     reached: DataFrame | None = None
@@ -642,7 +638,7 @@ def related_entities(
         reached = nxt if reached is None else reached.unionByName(nxt)
         frontier = nxt
     if reached is None:
-        reached = spark.createDataFrame([], "a string, path array<string>")
+        reached = frontier.limit(0)
     out = reached.select(
         F.col("a").alias("name"),
         F.array_join("path", ",").alias("rel_types"),
@@ -691,8 +687,10 @@ def graphrag_search(
       4. entity expansion from the hit chunks (neo4j_store.py:261-345)
 
     Returns {"hits": fused top-k with scores, "entities": expanded
-    entity names}. The answer-generation step (graphrag.py:196-222) is
-    out of scope per SURVEY.md O25 (non-deterministic external LLM).
+    entity names}, both as driver-local frames: the fused top-k runs
+    once, its ids seed the expansion, and reading either result again
+    runs no Spark job. The answer-generation step (graphrag.py:196-222)
+    is out of scope per SURVEY.md O25 (non-deterministic external LLM).
     """
     from .textops import embed_text  # noqa: PLC0415
 
@@ -725,11 +723,35 @@ def graphrag_search(
         vec_hits, kw_hits, k=top_k,
         vector_weight=vector_weight, keyword_weight=keyword_weight,
     )
-    hit_ids = [r["chunk_id"] for r in hits.select("chunk_id").collect()]
+    hit_rows = hits.collect()
     entities = entities_from_chunks(
-        mentions, hit_ids, max_depth=max_depth, kg_nodes=kg_nodes
+        mentions, [r["chunk_id"] for r in hit_rows],
+        max_depth=max_depth, kg_nodes=kg_nodes,
     )
-    return {"hits": hits, "entities": entities}
+    spark = chunks.sparkSession
+    return {
+        "hits": _local_frame(spark, hit_rows, hits.schema),
+        "entities": _local_frame(spark, entities.collect(), entities.schema),
+    }
+
+
+def _local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """Driver-side rows as an Arrow-backed LocalRelation: reading it runs
+    no Spark job, unlike spark.createDataFrame(<list>), which pickles the
+    rows into an RDD scan. Nulls, NaN and int columns round-trip exactly."""
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_pydict(
+        {f.name: [r[i] for r in rows] for i, f in enumerate(arrow_schema)},
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+#: the graphrag_search results a query-cache record holds
+_CACHED = ("hits", "entities")
 
 
 def graphrag_search_cached(
@@ -754,10 +776,13 @@ def graphrag_search_cached(
 ) -> dict:
     """Query-result cache over graphrag_search — the reference caches
     search results for 1 h keyed on sha256(query+params)
-    (graphrag.py:44-64,93-96). Here the cache is a pair of TableIO
-    tables keyed on the same digest: a repeated identical query within
-    the TTL is two snapshot reads — zero recompute of the retrieval
-    DAG. Returns {"hits", "entities", "cached": bool}.
+    (graphrag.py:44-64,93-96). Here the cache is one JSON record per
+    digest under <warehouse>/_qcache/ (TableIO.cache_get/cache_put),
+    holding both results' rows and schemas and the write time: a
+    repeated identical query within the TTL is one file read and two
+    local frames — zero recompute of the retrieval DAG, at a cost that
+    does not grow with the number of cached queries. An expired record
+    is overwritten in place. Returns {"hits", "entities", "cached": bool}.
 
     Unlike the reference's in-memory per-store cache, this cache is
     persisted in a warehouse and survives processes — so the key must
@@ -769,7 +794,6 @@ def graphrag_search_cached(
     import json  # noqa: PLC0415
     import time  # noqa: PLC0415
 
-    spark = chunks.sparkSession
     if corpus_id is None:
         try:
             corpus_id = io.current_snapshot("chunks")
@@ -793,16 +817,16 @@ def graphrag_search_cached(
         ).encode()
     ).hexdigest()
     now = time.time()
-    hit_snap = io.find_snapshot("_qcache_hits", key)
-    ent_snap = io.find_snapshot("_qcache_entities", key)
-    if hit_snap is not None and ent_snap is not None:
-        meta = io.snapshot_metadata("_qcache_hits", hit_snap)
-        if now - meta.get("ts", 0.0) <= ttl_seconds:
-            return {
-                "hits": io.read(spark, "_qcache_hits", hit_snap),
-                "entities": io.read(spark, "_qcache_entities", ent_snap),
-                "cached": True,
-            }
+    record = io.cache_get(key)
+    if record is not None and now - record["ts"] <= ttl_seconds:
+        spark = chunks.sparkSession
+        return {
+            name: _local_frame(
+                spark, record[name]["rows"],
+                StructType.fromJson(record[name]["schema"]),
+            )
+            for name in _CACHED
+        } | {"cached": True}
     out = graphrag_search(
         chunks, embeddings, mentions, query_text,
         top_k=top_k, max_depth=max_depth, embed_dim=embed_dim,
@@ -811,18 +835,13 @@ def graphrag_search_cached(
         hybrid=hybrid, vector_weight=vector_weight,
         keyword_weight=keyword_weight, bm25_stats=bm25_stats,
     )
-    hs = io.commit(
-        "_qcache_hits", out["hits"], input_snapshot=key, metadata={"ts": now}
-    )
-    es = io.commit(
-        "_qcache_entities", out["entities"], input_snapshot=key,
-        metadata={"ts": now},
-    )
-    return {
-        "hits": io.read(spark, "_qcache_hits", hs),
-        "entities": io.read(spark, "_qcache_entities", es),
-        "cached": False,
-    }
+    # both frames are local: collecting them again runs no Spark job
+    io.cache_put(key, {"ts": now} | {
+        name: {"schema": out[name].schema.jsonValue(),
+               "rows": out[name].collect()}
+        for name in _CACHED
+    })
+    return out | {"cached": False}
 
 
 def build_context(

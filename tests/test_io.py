@@ -143,7 +143,7 @@ class TestIcebergConformance:
         assert len(files) == 1 and files.pop().endswith("cell=2")
 
     def test_metadata_rides_with_snapshot(self, spark, tmp_path):
-        """Commit-time metadata (IVF centroids, cache timestamps) is
+        """Commit-time metadata (IVF centroids, BM25 corpus scalars) is
         bound to the snapshot id — Iceberg snapshot summary props."""
         io = TableIO(str(tmp_path / "wh"))
         s0 = io.commit("t", _df(spark, [1]), metadata={"k": "v0"})

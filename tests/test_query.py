@@ -240,40 +240,130 @@ def test_graphrag_query_cache_skips_recompute(spark, tmp_path, monkeypatch):
     """Reference graphrag.py:44-64: identical query+params within the
     TTL is served from cache. Evidence of zero recompute: after the
     first call, vector_topk is monkeypatched to raise — the cached
-    second call must still succeed and match; a changed param or an
-    expired TTL must recompute (and therefore raise)."""
+    second call must still succeed and return the miss's rows exactly;
+    a changed param, an expired TTL, another corpus id or a cleared and
+    rebuilt warehouse must recompute (and therefore raise). The cache is
+    one JSON record per key: no cache tables, an expired record is
+    overwritten in place, and a fresh TableIO is served the record."""
+    import json
+    import os
+
     from kgspark.fixtures import pages_df
-    from kgspark.io import TableIO
+    from kgspark.io import CACHE_DIR, TableIO
     from kgspark.pipeline import build_kg_frames
 
     frames = build_kg_frames(spark, pages_df(spark, 40), link_mode="exact")
-    io = TableIO(str(tmp_path / "wh"))
+    wh = str(tmp_path / "wh")
+    io = TableIO(wh)
+    # the key's corpus id defaults to the current `chunks` snapshot
+    io.commit("chunks", frames["chunks"])
     args = (frames["chunks"], frames["embeddings"], frames["mentions"],
             "court contract agreement")
-    first = query.graphrag_search_cached(io, *args, top_k=3)
+    kw = {"top_k": 3, "kg_nodes": frames["kg_nodes"]}
+
+    def rows(out):
+        return {k: [repr(r) for r in out[k].collect()]
+                for k in ("hits", "entities")}
+
+    first = query.graphrag_search_cached(io, *args, **kw)
     assert first["cached"] is False
-    hits1 = sorted((r["chunk_id"], round(r["combined_score"], 9))
-                   for r in first["hits"].collect())
+    rows1 = rows(first)
+    ents = first["entities"].collect()
+    assert ents and all(type(r["hops"]) is int for r in ents)
 
     def boom(*a, **kw):
         raise AssertionError("retrieval recomputed despite cache hit")
 
     monkeypatch.setattr(query, "vector_topk", boom)
-    second = query.graphrag_search_cached(io, *args, top_k=3)
-    assert second["cached"] is True
-    hits2 = sorted((r["chunk_id"], round(r["combined_score"], 9))
-                   for r in second["hits"].collect())
-    assert hits1 == hits2
+    # exact rows (float scores, int hops) and schemas, also across processes
+    for reader in (io, TableIO(wh)):
+        second = query.graphrag_search_cached(reader, *args, **kw)
+        assert second["cached"] is True
+        assert rows(second) == rows1
+        for k in ("hits", "entities"):
+            assert second[k].schema == first[k].schema
     # different params -> different key -> recompute path (raises)
     with pytest.raises(AssertionError, match="recomputed"):
-        query.graphrag_search_cached(io, *args, top_k=4)
+        query.graphrag_search_cached(io, *args, **{**kw, "top_k": 4})
     # expired TTL -> recompute path (raises)
     with pytest.raises(AssertionError, match="recomputed"):
-        query.graphrag_search_cached(io, *args, top_k=3, ttl_seconds=0.0)
+        query.graphrag_search_cached(io, *args, ttl_seconds=0.0, **kw)
     # a DIFFERENT corpus sharing the warehouse must never be served the
     # old corpus's cached hits — corpus_id is part of the key
     with pytest.raises(AssertionError, match="recomputed"):
-        query.graphrag_search_cached(io, *args, top_k=3, corpus_id="rebuilt-v2")
+        query.graphrag_search_cached(io, *args, corpus_id="rebuilt-v2", **kw)
+    monkeypatch.undo()
+
+    # one file per key, no _qcache_* tables; an expired record is
+    # rewritten under the same name
+    cache_dir = os.path.join(wh, CACHE_DIR)
+    (record,) = os.listdir(cache_dir)
+    assert io.tables() == ["chunks"]
+    with open(os.path.join(cache_dir, record)) as f:
+        ts0 = json.load(f)["ts"]
+    again = query.graphrag_search_cached(io, *args, ttl_seconds=0.0, **kw)
+    assert again["cached"] is False and rows(again) == rows1
+    assert os.listdir(cache_dir) == [record]
+    with open(os.path.join(cache_dir, record)) as f:
+        assert json.load(f)["ts"] > ts0
+
+    # an empty entities list round-trips too (mentions are not in the key)
+    no_mentions = (*args[:2], frames["mentions"].limit(0), args[3])
+    miss = query.graphrag_search_cached(io, *no_mentions, corpus_id="none", **kw)
+    hit = query.graphrag_search_cached(io, *no_mentions, corpus_id="none", **kw)
+    assert (miss["cached"], hit["cached"]) == (False, True)
+    assert rows(hit) == rows(miss) and rows(hit)["entities"] == []
+    assert hit["entities"].schema == miss["entities"].schema
+
+    # clear_all removes the cache: a rebuilt warehouse reuses chunks
+    # snapshot s0000, so a leftover record would match the same key
+    io.clear_all()
+    assert not os.path.exists(cache_dir)
+    io.commit("chunks", frames["chunks"])
+    monkeypatch.setattr(query, "vector_topk", boom)
+    with pytest.raises(AssertionError, match="recomputed"):
+        query.graphrag_search_cached(io, *args, **kw)
+
+
+def test_graphrag_search_one_pass_plan_shape(spark, tmp_path, monkeypatch):
+    """A search miss runs the fused top-k once: `hits` comes back as a
+    LocalRelation, so reading it never scans embeddings again. The
+    entity expansion is seeded by a filter: the seed's scan of
+    `extracted` carries a pushed chunk_id IN (...) filter and the plan
+    has no ExistingRDD leaf (a frame built from a Python list)."""
+    from kgspark.fixtures import pages_df
+    from kgspark.io import TableIO
+    from kgspark.pipeline import build_kg_frames
+    from kgspark.stages import mentions_of
+
+    frames = build_kg_frames(spark, pages_df(spark, 40), link_mode="exact")
+    io = TableIO(str(tmp_path / "wh"))
+    for t in ("embeddings", "extracted"):
+        io.commit(t, frames[t])
+    seeds = []
+    orig = query.entities_from_chunks
+    monkeypatch.setattr(
+        query, "entities_from_chunks",
+        lambda *a, **k: seeds.append(orig(*a, **k)) or seeds[-1],
+    )
+    out = query.graphrag_search(
+        frames["chunks"], io.read(spark, "embeddings"),
+        mentions_of(io.read(spark, "extracted")),
+        "court contract agreement", top_k=5,
+    )
+    qe = out["hits"]._jdf.queryExecution()
+    assert qe.optimizedPlan().toString().startswith("LocalRelation")
+    assert "FileScan" not in qe.executedPlan().toString()
+    assert out["hits"].count() == 5
+
+    (seed,) = seeds
+    plan = seed._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan" in ln and "chunk_id#" in ln]
+    assert scans, "expected the seed to scan extracted from parquet"
+    for ln in scans:
+        assert "In(chunk_id, [" in ln, f"seed scan without pushdown: {ln}"
+    assert "ExistingRDD" not in plan
 
 
 def test_bm25_rare_term_outranks_stopword_heavy(spark):

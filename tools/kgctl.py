@@ -34,8 +34,8 @@ Differences from the reference, by design (SURVEY.md §2):
   * search prints the retrieval result (hits + entities + assembled
     context) without the final LLM answer (out of scope per SURVEY
     O25); `--no-cache` bypasses the TTL query cache the reference
-    keeps in Redis (graphrag.py:44-64) and the engine keeps in
-    TableIO tables;
+    keeps in Redis (graphrag.py:44-64) and the engine keeps as one
+    JSON record per query key under <warehouse>/_qcache/;
   * delete == kg_builder.clear_all() (reference cli/main.py:delete_all)
     == TableIO.clear_all().
 
@@ -222,11 +222,6 @@ def cmd_search(args) -> dict:
             io, chunks, embeddings, mentions, args.query, **kwargs
         )
         cached = out["cached"]
-    # persist the top-k frames once: hits/entities are each consumed
-    # twice below (collect + context assembly) and would otherwise
-    # re-execute the full retrieval plan per action
-    out["hits"] = out["hits"].persist()
-    out["entities"] = out["entities"].persist()
     hits = [r.asDict() for r in out["hits"].collect()]
     entities = [r.asDict() for r in out["entities"].collect()]
     context = build_context(out["hits"], out["entities"], chunks)
