@@ -831,11 +831,15 @@ def _q_hll_merged_distinct(spark, sf_dir):
             F.count_distinct("user_id").alias("exact_distinct"),
         )
     )
-    rel_err = F.abs(F.col("distinct_est") - F.col("exact_distinct")) / F.col(
-        "exact_distinct"
-    )
+    # full_outer + coalesce sentinels, like the streaming self-checks: a
+    # partition missing from either side reads -1 there, which fails the
+    # bound (rel_err >= 1), so the row drops and the driver's row count
+    # flips instead of the inner join hiding the gap
+    est_d = F.coalesce(F.col("distinct_est"), F.lit(-1))
+    exact_d = F.coalesce(F.col("exact_distinct"), F.lit(-1))
+    rel_err = F.abs(est_d - exact_d) / F.abs(exact_d)
     return (
-        est.join(exact, "partition")
+        est.join(exact, "partition", "full_outer")
         .select(
             "partition", "n_rows", "distinct_est", "exact_distinct",
             F.round(rel_err, 6).alias("rel_err"),

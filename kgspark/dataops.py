@@ -3372,8 +3372,7 @@ def semantic_dedup_pairs(
         assigned = assigned.join(F.broadcast(sizes), "cell").withColumn(
             "subcell",
             F.pmod(
-                F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15),
-                       16, 10).cast("long"),
+                md5_hash60(F.col(id_col)),
                 F.greatest(F.col("__n_sub"), F.lit(1)),
             ).cast("int"),
         ).drop("__n_sub")

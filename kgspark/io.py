@@ -34,6 +34,7 @@ import tempfile
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: warehouse subdirectory of the query-result cache: one JSON record per
 #: key, so a lookup reads one file whatever the number of cached queries
@@ -50,6 +51,23 @@ def _replace_json(path: str, obj: Any, indent: int | None = 1) -> None:
     with os.fdopen(fd, "w") as f:
         json.dump(obj, f, indent=indent)
     os.replace(tmp, path)
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """Driver-side rows as an Arrow-backed LocalRelation: reading it runs
+    no Spark job, unlike spark.createDataFrame(<list>), which pickles the
+    rows into an RDD scan. Nulls, NaN and int columns round-trip exactly,
+    and the values are data, not plan literals, so a plan over them
+    generates the same code whatever the values are."""
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_pydict(
+        {f.name: [r[i] for r in rows] for i, f in enumerate(arrow_schema)},
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class TableIO:

@@ -131,14 +131,10 @@ def encode_bmp(pixels) -> bytes:
     return header + rows.tobytes()
 
 
-def _decode_bmp(content: bytes):
-    """Decode an uncompressed 24-bit BMP into an (h, w, 3) uint8 RGB
-    array. Handles bottom-up (positive height) and top-down (negative
-    height) row order. Raises ValueError on anything the subset does
-    not cover (compressed, paletted, truncated) — callers treat that
-    as a poison-pill row, never a stage failure."""
-    import numpy as np  # noqa: PLC0415
-
+def _bmp_header(content: bytes) -> tuple[int, int, bool, int, int]:
+    """(w, h, top_down, offset, row_size) of an uncompressed 24-bit BMP,
+    with the pixel array's extent checked against the blob length.
+    Raises ValueError on anything the subset does not cover."""
     if len(content) < 54 or content[:2] != b"BM":
         raise ValueError("not a BMP")
     offset = struct.unpack_from("<I", content, 10)[0]
@@ -154,6 +150,18 @@ def _decode_bmp(content: bytes):
     row_size = (3 * w + 3) // 4 * 4
     if offset + row_size * h > len(content):
         raise ValueError("truncated BMP")
+    return w, h, top_down, offset, row_size
+
+
+def _decode_bmp(content: bytes):
+    """Decode an uncompressed 24-bit BMP into an (h, w, 3) uint8 RGB
+    array. Handles bottom-up (positive height) and top-down (negative
+    height) row order. Raises ValueError on anything the subset does
+    not cover (compressed, paletted, truncated) — callers treat that
+    as a poison-pill row, never a stage failure."""
+    import numpy as np  # noqa: PLC0415
+
+    w, h, top_down, offset, row_size = _bmp_header(content)
     rows = np.frombuffer(
         content, dtype=np.uint8, count=row_size * h, offset=offset
     ).reshape(h, row_size)
@@ -170,12 +178,10 @@ def encode_ppm(pixels) -> bytes:
     return b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
 
 
-def _decode_ppm(content: bytes):
-    """Decode a binary PPM (P6, maxval 255) into (h, w, 3) uint8 RGB.
-    Raises ValueError on the unsupported corners (ASCII P3, 16-bit
-    maxval, truncation)."""
-    import numpy as np  # noqa: PLC0415
-
+def _ppm_header(content: bytes) -> tuple[int, int, int]:
+    """(w, h, raster_offset) of a binary PPM (P6, maxval 255), with the
+    raster's extent checked against the blob length. Raises ValueError
+    on the unsupported corners (ASCII P3, 16-bit maxval, truncation)."""
     if len(content) < 2 or content[:2] != b"P6":
         raise ValueError("not a P6 PPM")
     # header = magic + 3 whitespace-separated ints, '#' comments allowed
@@ -210,6 +216,15 @@ def _decode_ppm(content: bytes):
         pos += 1
     if pos + 3 * w * h > len(content):
         raise ValueError("truncated PPM")
+    return w, h, pos
+
+
+def _decode_ppm(content: bytes):
+    """Decode a binary PPM (P6, maxval 255) into (h, w, 3) uint8 RGB.
+    Raises ValueError like _ppm_header."""
+    import numpy as np  # noqa: PLC0415
+
+    w, h, pos = _ppm_header(content)
     return np.frombuffer(
         content, dtype=np.uint8, count=3 * w * h, offset=pos
     ).reshape(h, w, 3)
@@ -217,18 +232,20 @@ def _decode_ppm(content: bytes):
 
 def _image_dims(content: bytes):
     """(width, height, n_pixel_bytes) for a real image blob, or None
-    if the blob is not a supported real format — the cheap header-only
-    probe decode_meta uses (no full pixel materialization)."""
+    if the blob is not a supported real format or is truncated — the
+    header-only probe decode_meta uses: it parses the BMP/PPM header
+    and checks the payload length arithmetically, exactly as the
+    decoders do, without materializing any pixels."""
+    content = bytes(content)
     try:
         if content[:2] == b"BM":
-            px = _decode_bmp(bytes(content))
+            w, h = _bmp_header(content)[:2]
         elif content[:2] == b"P6":
-            px = _decode_ppm(bytes(content))
+            w, h = _ppm_header(content)[:2]
         else:
             return None
     except ValueError:
         return None
-    h, w, _ = px.shape
     return (w, h, 3 * w * h)
 
 

@@ -12,6 +12,14 @@ Two modes:
     n_urls, duration_ms, run_id) — the north rule's resumable-with-
     lineage contract. A re-run with the same corpus_id skips every stage
     whose (table, input_snapshot) pair is already committed.
+
+Lineage is data, not plan: each stage's per-partition counts are
+collected to the driver right after its commit and the run commits
+them once from a local Arrow frame. Stage names, run ids and durations
+therefore never become plan literals, and a second run in the same
+session reuses every generated class of the first (Spark inlines long
+literals into generated code, so a per-run `duration_ms` literal would
+make each run compile its lineage plans anew).
 """
 
 from __future__ import annotations
@@ -19,9 +27,10 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from . import cc, linking, stages
-from .io import TableIO
+from .io import TableIO, local_frame
 from .query import build_inverted_index
 
 LINEAGE_DDL = (
@@ -92,28 +101,53 @@ def build_kg_frames(
     }
 
 
-def _lineage_rows(df: DataFrame, stage: str, run_id: str,
-                  input_snapshot: str | None, duration_ms: int) -> DataFrame:
-    """Per-partition lineage: row + url counts by spark_partition_id()."""
-    has_url = "url" in df.columns
-    agg = [F.count(F.lit(1)).alias("n_rows")]
-    agg.append(
-        F.countDistinct("url").alias("n_urls") if has_url
-        else F.lit(-1).cast("long").alias("n_urls")
-    )
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(*agg)
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("partition_id"),
-            F.lit(run_id).alias("run_id"),
-            F.col("n_rows"),
-            F.col("n_urls"),
-            F.lit(duration_ms).cast("long").alias("duration_ms"),
-            F.lit(input_snapshot).alias("input_snapshot"),
-        )
-    )
+class _StageLog:
+    """One run's stage commits: the resume check, the timed build +
+    commit, and the per-partition lineage rows, committed once at the
+    end as this run's `_lineage` delta."""
+
+    def __init__(self, io: TableIO, spark: SparkSession, run_id: str):
+        self.io = io
+        self.spark = spark
+        self.run_id = run_id
+        self.rows: list[tuple] = []
+        self.skipped: list[str] = []
+
+    def stage(self, table: str, input_key: str, build,
+              metadata: dict | None = None) -> str:
+        """The snapshot of `table` for `input_key`: an existing one
+        (resumed), else `build()` committed, timed, and counted per
+        partition of the committed snapshot (spark_partition_id())."""
+        existing = self.io.find_snapshot(table, input_key)
+        if existing is not None:
+            self.skipped.append(table)
+            return existing
+        t0 = time.monotonic()
+        snap = self.io.commit(table, build(), input_key, metadata=metadata)
+        dur_ms = int((time.monotonic() - t0) * 1000)
+        df = self.io.read(self.spark, table, snap)
+        has_url = "url" in df.columns
+        counts = [F.count(F.lit(1))]
+        if has_url:
+            counts.append(F.countDistinct("url"))
+        for r in df.groupBy(F.spark_partition_id()).agg(*counts).collect():
+            self.rows.append((
+                table, r[0], self.run_id, r[1], r[2] if has_url else -1,
+                dur_ms, input_key,
+            ))
+        return snap
+
+    def commit(self) -> None:
+        """Append-only: commit ONLY this run's delta. Earlier runs' rows
+        stay in their own snapshots — readers use Pipeline.lineage(),
+        which unions all snapshots — so commit I/O is O(this run), not
+        O(all history)."""
+        if self.rows:
+            schema = StructType.fromDDL(LINEAGE_DDL)
+            self.io.commit(
+                "_lineage", local_frame(self.spark, self.rows, schema),
+                self.run_id,
+            )
 
 
 class Pipeline:
@@ -204,46 +238,24 @@ class Pipeline:
         snapshot for the same input chain already exists.
         """
         snaps: dict[str, str] = {}
-        skipped: list[str] = []
+        log = _StageLog(self.io, spark, run_id)
 
         existing = self.io.find_snapshot("pages", corpus_id)
         if existing is not None:
             snaps["pages"] = existing
-            skipped.append("pages")
+            log.skipped.append("pages")
         else:
             if pages is None:
                 raise ValueError("pages DataFrame required for a fresh run")
             snaps["pages"] = self.io.commit("pages", pages, corpus_id)
 
-        lineage_parts = []
         for table, inputs in self.STAGES:
             input_key = ",".join(f"{t}:{snaps[t]}" for t in inputs)
-            existing = self.io.find_snapshot(table, input_key)
-            if existing is not None:
-                snaps[table] = existing
-                skipped.append(table)
-                continue
-            t0 = time.monotonic()
-            df = self._build(spark, table)
-            snaps[table] = self.io.commit(table, df, input_key)
-            dur_ms = int((time.monotonic() - t0) * 1000)
-            lineage_parts.append(
-                _lineage_rows(
-                    self.io.read(spark, table, snaps[table]),
-                    table, run_id, input_key, dur_ms,
-                )
+            snaps[table] = log.stage(
+                table, input_key, lambda: self._build(spark, table)
             )
-        if lineage_parts:
-            lineage = lineage_parts[0]
-            for part in lineage_parts[1:]:
-                lineage = lineage.unionByName(part)
-            # append-only: commit ONLY this run's delta. Earlier runs'
-            # rows stay in their own snapshots — readers use
-            # lineage(), which unions all snapshots — so commit I/O is
-            # O(this run), not O(all history) (a long-lived pipeline
-            # would otherwise rewrite the full log every run).
-            self.io.commit("_lineage", lineage, run_id)
-        self.last_skipped = skipped
+        log.commit()
+        self.last_skipped = log.skipped
         return snaps
 
     # incremental upload -------------------------------------------------
@@ -299,14 +311,14 @@ class Pipeline:
         without going through the map stages yet.
         """
         snaps: dict[str, str] = {}
-        skipped: list[str] = []
+        log = _StageLog(self.io, spark, run_id)
 
         if pages_delta is not None:
             pages_key = f"delta:{delta_id}"
             existing = self.io.find_snapshot("pages", pages_key)
             if existing is not None:
                 snaps["pages"] = existing
-                skipped.append("pages")
+                log.skipped.append("pages")
             else:
                 try:
                     seen = (
@@ -323,14 +335,13 @@ class Pipeline:
                     # append snapshots through all five map stages and
                     # change the merge acc_key, forcing a full
                     # merge-stage rebuild for nothing.
-                    skipped.append("pages")
+                    log.skipped.append("pages")
                 else:
                     snaps["pages"] = self.io.commit(
                         "pages", fresh, pages_key,
                         metadata={"mode": "append"},
                     )
 
-        lineage_parts = []
         # each map stage processes every accumulated upstream snapshot
         # it has not consumed yet (consumption is recorded in commit
         # input keys) — this covers both the delta committed above AND
@@ -340,26 +351,15 @@ class Pipeline:
             upstream = inputs[0]
             pending = self._unconsumed(table, upstream)
             if not pending:
-                skipped.append(table)
+                log.skipped.append(table)
                 continue
             input_key = ",".join(f"{upstream}:{p['id']}" for p in pending)
-            existing = self.io.find_snapshot(table, input_key)
-            if existing is not None:
-                snaps[table] = existing
-                skipped.append(table)
-                continue
-            t0 = time.monotonic()
-            delta_df = spark.read.parquet(*[p["path"] for p in pending])
-            df = self._map_stage_builder(table)(delta_df)
-            snaps[table] = self.io.commit(
-                table, df, input_key, metadata={"mode": "append"}
-            )
-            dur_ms = int((time.monotonic() - t0) * 1000)
-            lineage_parts.append(
-                _lineage_rows(
-                    self.io.read(spark, table, snaps[table]),
-                    table, run_id, input_key, dur_ms,
-                )
+            snaps[table] = log.stage(
+                table, input_key,
+                lambda: self._map_stage_builder(table)(
+                    spark.read.parquet(*[p["path"] for p in pending])
+                ),
+                metadata={"mode": "append"},
             )
 
         # merge stages: rebuilt (full commits) over the union of every
@@ -372,7 +372,7 @@ class Pipeline:
         except FileNotFoundError:
             # nothing has ever been extracted (e.g. an all-duplicate or
             # empty first delta): no merge to run
-            self.last_skipped = skipped
+            self.last_skipped = log.skipped
             return snaps
         extracted_all = self.io.read_accumulated(spark, "extracted")
         mentions = stages.mentions_of(extracted_all)
@@ -392,29 +392,9 @@ class Pipeline:
             ),
         }
         for table, _ in self.MERGE_STAGES:
-            existing = self.io.find_snapshot(table, acc_key)
-            if existing is not None:
-                snaps[table] = existing
-                skipped.append(table)
-                continue
-            t0 = time.monotonic()
-            snaps[table] = self.io.commit(
-                table, merge_builders[table](), acc_key
-            )
-            dur_ms = int((time.monotonic() - t0) * 1000)
-            lineage_parts.append(
-                _lineage_rows(
-                    self.io.read(spark, table, snaps[table]),
-                    table, run_id, acc_key, dur_ms,
-                )
-            )
-
-        if lineage_parts:
-            lineage = lineage_parts[0]
-            for part in lineage_parts[1:]:
-                lineage = lineage.unionByName(part)
-            self.io.commit("_lineage", lineage, run_id)
-        self.last_skipped = skipped
+            snaps[table] = log.stage(table, acc_key, merge_builders[table])
+        log.commit()
+        self.last_skipped = log.skipped
         return snaps
 
     def curate(
@@ -442,29 +422,20 @@ class Pipeline:
             s["id"] for s in self.io.accumulated_snapshots("docs")
         )
         input_key = f"docs:{doc_ids}:k={k}:pct={threshold_pct}"
-        existing = self.io.find_snapshot("curated", input_key)
-        if existing is not None:
-            self.last_skipped = ["curated"]
-            return existing
-        t0 = time.monotonic()
-        docs = self.io.read_accumulated(spark, "docs").select(
-            F.col("url").alias("doc_id"), "text"
-        )
-        cur = curate_corpus(docs, k=k, threshold_pct=threshold_pct)
-        snap = self.io.commit(
-            "curated", cur, input_key,
+
+        def build() -> DataFrame:
+            docs = self.io.read_accumulated(spark, "docs").select(
+                F.col("url").alias("doc_id"), "text"
+            )
+            return curate_corpus(docs, k=k, threshold_pct=threshold_pct)
+
+        log = _StageLog(self.io, spark, run_id)
+        snap = log.stage(
+            "curated", input_key, build,
             metadata={"k": k, "threshold_pct": threshold_pct},
         )
-        dur_ms = int((time.monotonic() - t0) * 1000)
-        self.io.commit(
-            "_lineage",
-            _lineage_rows(
-                self.io.read(spark, "curated", snap),
-                "curated", run_id, input_key, dur_ms,
-            ),
-            run_id,
-        )
-        self.last_skipped = []
+        log.commit()
+        self.last_skipped = log.skipped
         return snap
 
     def lineage(self, spark: SparkSession) -> DataFrame:

@@ -13,10 +13,11 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructType
 
 from . import KEYWORD_WEIGHT, MAX_DEPTH, TOP_K, VECTOR_WEIGHT
+from .io import local_frame
 
 _TOKEN_RE = re.compile(r"[a-z0-9]+")
 
@@ -730,24 +731,9 @@ def graphrag_search(
     )
     spark = chunks.sparkSession
     return {
-        "hits": _local_frame(spark, hit_rows, hits.schema),
-        "entities": _local_frame(spark, entities.collect(), entities.schema),
+        "hits": local_frame(spark, hit_rows, hits.schema),
+        "entities": local_frame(spark, entities.collect(), entities.schema),
     }
-
-
-def _local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
-    """Driver-side rows as an Arrow-backed LocalRelation: reading it runs
-    no Spark job, unlike spark.createDataFrame(<list>), which pickles the
-    rows into an RDD scan. Nulls, NaN and int columns round-trip exactly."""
-    import pyarrow as pa  # noqa: PLC0415
-    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
-
-    arrow_schema = to_arrow_schema(schema)
-    table = pa.Table.from_pydict(
-        {f.name: [r[i] for r in rows] for i, f in enumerate(arrow_schema)},
-        schema=arrow_schema,
-    )
-    return spark.createDataFrame(table, schema)
 
 
 #: the graphrag_search results a query-cache record holds
@@ -821,7 +807,7 @@ def graphrag_search_cached(
     if record is not None and now - record["ts"] <= ttl_seconds:
         spark = chunks.sparkSession
         return {
-            name: _local_frame(
+            name: local_frame(
                 spark, record[name]["rows"],
                 StructType.fromJson(record[name]["schema"]),
             )

@@ -14,6 +14,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: spark.sql.codegen.cache.maxEntries (a static conf, so it is fixed at
+#: session start). One Pipeline.run needs about 95-125 distinct generated
+#: classes; Spark's default of 100 is smaller than that, and the cache
+#: evicts least-recently-used first, so a run that revisits its stages in
+#: the same order misses almost every lookup and Janino recompiles the
+#: whole working set on every run. 1000 holds a run with room for the
+#: query and curation operators a long-lived session also runs.
+CODEGEN_CACHE_ENTRIES = 1000
+
+#: JVM locale for driver and executors. JVM String.toLowerCase/toUpperCase
+#: follow the default locale (a Turkish default maps "I" to dotless "ı"),
+#: while the Python stages are locale-free; pinning it keeps JVM and
+#: Python string folding identical on every host. Set
+#: through defaultJavaOptions, which Spark prepends to extraJavaOptions,
+#: so a caller's extraJavaOptions (heap flags, profilers) keeps the pin.
+JVM_LOCALE_OPTS = "-Duser.language=en -Duser.country=US"
+
 
 def get_spark(
     app_name: str = "kgspark",
@@ -70,6 +87,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("KGSPARK_DRIVER_MEM", "8g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.driver.defaultJavaOptions", JVM_LOCALE_OPTS)
+        .config("spark.executor.defaultJavaOptions", JVM_LOCALE_OPTS)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

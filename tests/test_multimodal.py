@@ -232,3 +232,30 @@ def test_ppm_crlf_separator_and_malformed_separator():
     assert np.array_equal(mm._decode_ppm(crlf), px)
     with pytest.raises(ValueError):
         mm._decode_ppm(blob.replace(b"255\n", b"255X", 1))
+
+
+def test_image_dims_is_header_only_and_matches_full_decode(monkeypatch):
+    """_image_dims parses only the BMP/PPM header (the decoders are
+    disabled while it runs) and still reports the full-decode dims,
+    while a truncated payload is still caught by the length check."""
+    blobs = []
+    for i, (w, h) in enumerate([(1, 1), (7, 13), (16, 48)]):
+        px = mm.media_pixels(f"m{i}", w, h)
+        ppm = mm.encode_ppm(px)
+        blobs += [mm.encode_bmp(px), ppm,
+                  ppm.replace(b"255\n", b"255\r\n", 1),
+                  b"P6\n# a comment\n" + ppm[3:]]
+    want = []
+    for blob in blobs:
+        px = mm._decode_payload(blob)
+        want.append((px.shape[1], px.shape[0], px.size))
+
+    def no_decode(content):
+        raise AssertionError("_image_dims decoded pixels")
+
+    monkeypatch.setattr(mm, "_decode_bmp", no_decode)
+    monkeypatch.setattr(mm, "_decode_ppm", no_decode)
+    assert [mm._image_dims(b) for b in blobs] == want
+    for blob in blobs:
+        assert mm._image_dims(blob[:-1]) is None
+    assert mm._image_dims(b"KGSM") is None

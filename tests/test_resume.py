@@ -230,3 +230,18 @@ def test_kgctl_upload_curate_search_verbs(spark, tmp_path):
     )
     res = kgctl.cmd_search(se)
     assert res["status"] == "ok" and res["chunks_used"] > 0
+
+
+def test_second_run_compiles_no_generated_class(spark, tmp_path):
+    """A second Pipeline.run in the same session compiles nothing: the
+    codegen cache (session.CODEGEN_CACHE_ENTRIES) holds a whole run, and
+    lineage is collected as data, so no plan carries a per-run literal
+    (run 2 writes a fresh warehouse, so every stage runs again)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    Pipeline(str(tmp_path / "wh_a")).run(spark, pages_df(spark, N), CORPUS)
+    before = compiles.getCount()
+    pipe = Pipeline(str(tmp_path / "wh_b"))
+    pipe.run(spark, pages_df(spark, N), CORPUS)
+    assert pipe.last_skipped == []
+    assert compiles.getCount() - before == 0

@@ -11,8 +11,11 @@ rule: "runs via spark-submit --py-files on a multi-executor cluster").
 
 Runs (or resumes) the checkpointed S1->S7 DAG against a TableIO
 warehouse and prints ONE JSON line: committed snapshot per table,
-skipped (resumed) stages, triple count, and a per-stage lineage
-rollup. Re-running with the same corpus id is a no-op resume.
+skipped (resumed) stages, triple count, a per-stage lineage rollup,
+and `driver_codegen_compiles`, the number of classes the driver JVM's
+Janino compiled during the run (executor JVMs keep their own counts).
+Re-running with the same corpus id is a no-op resume and compiles
+nothing.
 """
 
 from __future__ import annotations
@@ -45,6 +48,8 @@ def main() -> None:
     from kgspark.pipeline import Pipeline
 
     spark = SparkSession.builder.appName("kgspark-pipeline").getOrCreate()
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
 
     if args.pages_parquet:
         pages = spark.read.parquet(args.pages_parquet)
@@ -60,7 +65,9 @@ def main() -> None:
     pipe = Pipeline(
         args.warehouse, link_mode=args.link_mode, salt=args.salt
     )
+    compiles_before = compiles.getCount()
     snaps = pipe.run(spark, pages, corpus_id, run_id=args.run_id)
+    driver_codegen_compiles = compiles.getCount() - compiles_before
 
     rollup = {
         r["stage"]: r["n_rows"]
@@ -73,6 +80,7 @@ def main() -> None:
         "skipped": pipe.last_skipped,
         "n_triples": n_triples,
         "lineage_rows_by_stage": rollup,
+        "driver_codegen_compiles": driver_codegen_compiles,
         "warehouse": args.warehouse,
     }))
 
