@@ -52,7 +52,7 @@ _KG_FRAMES_CACHE: dict[str, dict] = {}
 
 def _kg_frames(spark: SparkSession, sf_dir: str):
     """Build (or reuse) the S1→S7 frames for a given sf_dir. Memoized
-    per (sf_dir): build_kg_frames(cache=True) materializes stage caches
+    per (sf_dir): build_kg_frames materializes its shared stage caches
     eagerly, so the 6+ KG driver queries must share ONE build instead of
     re-running the pipeline and stacking persisted blocks per query."""
     from kgspark.fixtures import pages_df
@@ -2221,7 +2221,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     verified in CORRECTNESS_r04.json) and no code change since, plus
     the remaining rows-only entries (each carrying a named pytest).
     tools/check_oracle.py runs the IDENTICAL gate over the full dict
-    locally; BENCH/oracle_full_r5.json records that run.
+    locally; BENCH/oracle_full_r6.json records that run.
 
     ROTATION CHECKLIST (ADVICE r4): before shipping a round, (a) every
     query whose underlying code changed this round is inside slots
@@ -2229,15 +2229,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     the full-dict check_oracle --json artifact is committed.
     """
     return {
-        # ---- 1. oracle-backed, never driver-verified (r4 adds) ----
-        "source_overlap": _q_source_overlap,
-        "per_source_sample": _q_per_source_sample,
+        # ---- 1. oracle-backed r4 adds (first driver-green in r5) ----
         "collocations_pmi": _q_collocations_pmi,
         "embedding_norm_stats": _q_embedding_norm_stats,
         "kmeans_inertia": _q_kmeans_inertia,           # also r5-fixed
-        "value_twap": _q_value_twap,
         "lm_perplexity_buckets": _q_lm_perplexity_buckets,
         # ---- 2. added/touched this round ----
+        # r6: one S1->S7 stage definition for build_kg_frames + Pipeline
+        "kg_triples": _q_kg_triples,
+        "kg_canonical": _q_kg_canonical,
+        "kg_incremental": _q_kg_incremental,
         # r5-fixed scale paths (oracle-backed)
         "zipf_slope": _q_zipf_slope,
         "semantic_dedup_pairs": _q_semantic_dedup,
@@ -2293,7 +2294,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # stable backlog: driver-green in CORRECTNESS_r04.json (the
         # entire r4 window) or r3, code unchanged since; plus remaining
         # rows-only entries (named pytests). All re-verified locally in
-        # BENCH/oracle_full_r5.json.
+        # BENCH/oracle_full_r6.json.
+        # driver-green in CORRECTNESS_r05.json, code unchanged since
+        "source_overlap": _q_source_overlap,
+        "per_source_sample": _q_per_source_sample,
+        "value_twap": _q_value_twap,
         "doc_fingerprint": _q_doc_fingerprint,
         "token_stats": _q_token_stats,
         "quality_scores": _q_quality_scores,
@@ -2335,10 +2340,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "source_mix_report": _q_source_mix,
         "degree_histogram": _q_degree_histogram,
         "negative_edges": _q_negative_edges,
-        "kg_triples": _q_kg_triples,
         "kg_chunk_stats": _q_kg_chunk_stats,
         "kg_top_connected": _q_kg_top_connected,
-        "kg_canonical": _q_kg_canonical,
         "kg_graphrag_search": _q_kg_graphrag,
         "kg_graphrag_entities": _q_kg_graphrag_entities,
         "kg_graph_stats": _q_kg_graph_stats,
@@ -2359,7 +2362,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_lang_windows": _q_streaming_lang_windows,
         "streaming_sessions": _q_streaming_sessions,
         "streaming_join": _q_streaming_join,
-        "kg_incremental": _q_kg_incremental,
         "incremental_dedup": _q_incremental_dedup,
         "kg_communities": _q_kg_communities,
     }

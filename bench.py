@@ -8,7 +8,7 @@ Env knobs:
 
 SEGMENT CONTRACT (pinned since r3 — cross-round comparability depends
 on these boundaries staying fixed):
-    kg_pipeline    = S1->S7 KG construction: build_kg_frames(cache) +
+    kg_pipeline    = S1->S7 KG construction: build_kg_frames +
                      materialization of kg_edges / kg_nodes /
                      embeddings (counts) + the chunks table full-column
                      scan. NOTHING else may move in or out.
@@ -175,7 +175,7 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
         # build_kg_frames executes CC eagerly (localCheckpoint per
         # iteration), so constructing the frames inside the timed region
         # charges the full S1->S7 cost to kg_pipeline
-        frames.update(build_kg_frames(spark, pages, link_mode="exact", cache=True))
+        frames.update(build_kg_frames(spark, pages, link_mode="exact"))
         frames["kg_edges"] = frames["kg_edges"].persist()
         frames["kg_nodes"] = frames["kg_nodes"].persist()
         frames["embeddings"] = frames["embeddings"].persist()

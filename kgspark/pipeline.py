@@ -1,30 +1,35 @@
 """Pipeline orchestration: S1..S7 as a linear DAG of stage jobs.
 
-Two modes:
+One stage definition, two evaluators. `STAGES` lists each table with
+its input tables, and `build_stage(table, read)` builds any of them
+from a `read(table) -> DataFrame` callable, reading only the inputs
+the stage uses. The evaluators differ only in what `read` returns:
 
-  * `build_kg_frames(spark, pages)` — in-memory: returns every stage as
-    a DataFrame (lazy; single-action consumers like tests/queries decide
-    what to materialize). No writes.
+  * `build_kg_frames(spark, pages)` — in memory: the frames built
+    before. No writes.
 
   * `Pipeline(warehouse).run(spark, pages, corpus_id)` — checkpointed:
-    each stage commits a TableIO snapshot keyed on its input snapshot id
-    and appends per-partition lineage rows (stage, partition_id, n_rows,
-    n_urls, duration_ms, run_id) — the north rule's resumable-with-
-    lineage contract. A re-run with the same corpus_id skips every stage
+    TableIO snapshots. Each stage commits a snapshot keyed on its input
+    snapshot ids and appends per-partition lineage rows (stage,
+    partition_id, n_rows, n_urls, duration_ms, run_id) — the north
+    rule's resumable-with-lineage contract; a re-run skips every stage
     whose (table, input_snapshot) pair is already committed.
+    `run_append` reads the unconsumed upstream snapshots in the map
+    stages and the accumulated extraction in the merge stages.
 
-Lineage is data, not plan: each stage's per-partition counts are
-collected to the driver right after its commit and the run commits
-them once from a local Arrow frame. Stage names, run ids and durations
-therefore never become plan literals, and a second run in the same
-session reuses every generated class of the first (Spark inlines long
-literals into generated code, so a per-run `duration_ms` literal would
-make each run compile its lineage plans anew).
+Lineage is data, not plan: the counts of every snapshot a run committed
+are collected in one union job after its last stage and committed from
+a local Arrow frame, so run ids, durations and input keys never become
+plan literals, and a second run in the same session reuses every
+generated class of the first (Spark inlines long literals into
+generated code).
 """
 
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -38,6 +43,73 @@ LINEAGE_DDL = (
     "n_urls long, duration_ms long, input_snapshot string"
 )
 
+# (table, input tables) in stage order. Committed snapshots are keyed on
+# their inputs' snapshot ids in this order, so kg_nodes and kg_edges list
+# `canonical` even where exact linking does not read it.
+STAGES = [
+    ("docs", ["pages"]),
+    ("chunks", ["docs"]),
+    ("embeddings", ["chunks"]),
+    ("inverted_index", ["chunks"]),
+    ("extracted", ["chunks"]),
+    ("canonical", ["extracted"]),
+    ("kg_nodes", ["extracted", "canonical"]),
+    ("kg_edges", ["extracted", "kg_nodes", "canonical"]),
+]
+
+
+def build_stage(
+    table: str,
+    read: Callable[[str], DataFrame],
+    link_mode: str = "exact",
+    salt: int = 0,
+    chunk_size: int = 500,
+    chunk_overlap: int = 100,
+    embed_dim: int = 64,
+) -> DataFrame:
+    """The STAGES table `table`, built from `read(input_table)`."""
+    if table == "docs":
+        return stages.extract_text(read("pages"))
+    if table == "chunks":
+        return stages.chunk(read("docs"), chunk_size, chunk_overlap)
+    if table == "embeddings":
+        return stages.embed(read("chunks"), embed_dim)
+    if table == "inverted_index":
+        return build_inverted_index(read("chunks"))
+    if table == "extracted":
+        return stages.extract(read("chunks"))
+    if table == "canonical":
+        mentions = stages.mentions_of(read("extracted"))
+        return cc.connected_components(
+            mentions.select("name").distinct(),
+            linking.similarity_edges(mentions, mode=link_mode),
+        )
+    if table not in ("kg_nodes", "kg_edges"):
+        raise KeyError(table)
+    # exact linking => canonical_id == name by construction (see cc.py),
+    # so the canonical-map joins are identity and elided algebraically.
+    # The lsh path keeps them (and their skew handling).
+    cmap = read("canonical") if link_mode != "exact" else None
+    if table == "kg_nodes":
+        return stages.dedup_nodes(stages.mentions_of(read("extracted")), cmap)
+    return stages.materialize_edges(
+        stages.raw_edges_of(read("extracted")), read("kg_nodes"), cmap,
+        salt=salt,
+    )
+
+
+# build_kg_frames persists the stages several consumers branch from and
+# fills each cache IN STAGE ORDER with the aggregate given here (None: CC
+# has already run eagerly), so kg_edges' plan does not re-run the
+# extractor. The chunks fill scans a full column: count() can serve from
+# cache stats without populating all column batches.
+SHARED_STAGES = {
+    "chunks": "sum(length(text))",
+    "extracted": "count(name)",
+    "canonical": None,
+    "kg_nodes": "count(1)",
+}
+
 
 def build_kg_frames(
     spark: SparkSession,
@@ -47,77 +119,41 @@ def build_kg_frames(
     chunk_size: int = 500,
     chunk_overlap: int = 100,
     embed_dim: int = 64,
-    cache: bool = True,
 ) -> dict[str, DataFrame]:
-    """Full S1→S7 DAG, in memory. `extracted` is cached (when requested)
-    because mentions/edges/linking all branch from it — one extractor
-    pass, many consumers.
-
-    With cache=True the stage caches are materialized eagerly IN STAGE
-    ORDER: every downstream branch (CC, node dedup, edge materialize)
-    then reuses the cached stage instead of re-deriving the Python UDF
-    chain — without this, kg_edges' plan re-runs dedup_nodes and the
-    extractor because it captures the pre-persist DataFrames."""
-    docs = stages.extract_text(pages)
-    chunks = stages.chunk(docs, chunk_size, chunk_overlap)
-    if cache:
-        chunks = chunks.persist()
-        # full-column scan: count() can serve from cache stats without
-        # populating all column batches
-        chunks.select(F.sum(F.length("text"))).collect()
-    embeddings = stages.embed(chunks, embed_dim)
-    extracted = stages.extract(chunks)
-    if cache:
-        extracted = extracted.persist()
-        extracted.select(F.count("name")).collect()
-    mentions = stages.mentions_of(extracted)
-    raw_edges = stages.raw_edges_of(extracted)
-    sim_edges = linking.similarity_edges(mentions, mode=link_mode)
-    names = mentions.select("name").distinct()
-    canonical = cc.connected_components(names, sim_edges)
-    if cache:
-        canonical = canonical.persist()
-    # exact linking => canonical_id == name by construction (cc.py:51-52),
-    # so the canonical-map joins are identity and elided algebraically.
-    # The lsh path keeps them (and their skew handling).
-    cmap = canonical if link_mode != "exact" else None
-    kg_nodes = stages.dedup_nodes(mentions, cmap)
-    if cache:
-        kg_nodes = kg_nodes.persist()
-        kg_nodes.count()
-    kg_edges = stages.materialize_edges(raw_edges, kg_nodes, cmap, salt=salt)
-    return {
-        "docs": docs,
-        "chunks": chunks,
-        "embeddings": embeddings,
-        "inverted_index": build_inverted_index(chunks),
-        "extracted": extracted,
-        "mentions": mentions,
-        "raw_edges": raw_edges,
-        "sim_edges": sim_edges,
-        "canonical": canonical,
-        "kg_nodes": kg_nodes,
-        "kg_edges": kg_edges,
-    }
+    """Every STAGES table, in memory, plus `mentions`. `embeddings` and
+    `inverted_index` stay lazy (bench.py times the index on its own)."""
+    frames = {"pages": pages}
+    for table, _ in STAGES:
+        df = build_stage(
+            table, frames.__getitem__, link_mode, salt, chunk_size,
+            chunk_overlap, embed_dim,
+        )
+        if table in SHARED_STAGES:
+            df = df.persist()
+            if SHARED_STAGES[table]:
+                df.selectExpr(SHARED_STAGES[table]).collect()
+        frames[table] = df
+    del frames["pages"]
+    frames["mentions"] = stages.mentions_of(frames["extracted"])
+    return frames
 
 
 class _StageLog:
-    """One run's stage commits: the resume check, the timed build +
-    commit, and the per-partition lineage rows, committed once at the
-    end as this run's `_lineage` delta."""
+    """One run's stage commits: the resume check and the timed build +
+    commit per stage, then one lineage delta for the whole run."""
 
     def __init__(self, io: TableIO, spark: SparkSession, run_id: str):
         self.io = io
         self.spark = spark
         self.run_id = run_id
-        self.rows: list[tuple] = []
+        self.done: list[tuple[str, str, int, str]] = []
         self.skipped: list[str] = []
 
     def stage(self, table: str, input_key: str, build,
               metadata: dict | None = None) -> str:
         """The snapshot of `table` for `input_key`: an existing one
-        (resumed), else `build()` committed, timed, and counted per
-        partition of the committed snapshot (spark_partition_id())."""
+        (resumed), else `build()` committed and recorded as
+        (table, snapshot, duration_ms, input_key)."""
         existing = self.io.find_snapshot(table, input_key)
         if existing is not None:
             self.skipped.append(table)
@@ -125,45 +161,48 @@ class _StageLog:
         t0 = time.monotonic()
         snap = self.io.commit(table, build(), input_key, metadata=metadata)
         dur_ms = int((time.monotonic() - t0) * 1000)
-        df = self.io.read(self.spark, table, snap)
-        has_url = "url" in df.columns
-        counts = [F.count(F.lit(1))]
-        if has_url:
-            counts.append(F.countDistinct("url"))
-        for r in df.groupBy(F.spark_partition_id()).agg(*counts).collect():
-            self.rows.append((
-                table, r[0], self.run_id, r[1], r[2] if has_url else -1,
-                dur_ms, input_key,
-            ))
+        self.done.append((table, snap, dur_ms, input_key))
         return snap
 
     def commit(self) -> None:
-        """Append-only: commit ONLY this run's delta. Earlier runs' rows
-        stay in their own snapshots — readers use Pipeline.lineage(),
-        which unions all snapshots — so commit I/O is O(this run), not
-        O(all history)."""
-        if self.rows:
+        """Count each recorded snapshot per scan partition in ONE union
+        job and commit this run's lineage delta. Append-only: readers
+        union all `_lineage` snapshots (Pipeline.lineage()), so commit
+        I/O is O(this run). size(collect_set) counts distinct urls with
+        one exchange fewer than countDistinct."""
+        if not self.done:
+            return
+        scans, has_url = [], []
+        for i, (table, snap, _, _) in enumerate(self.done):
+            df = self.io.read(self.spark, table, snap)
+            has_url.append("url" in df.columns)
+            url = F.col("url") if has_url[-1] else F.lit(None).cast("string")
+            scans.append(df.select(
+                F.lit(i).alias("i"), F.spark_partition_id().alias("p"),
+                url.alias("url"),
+            ))
+        counts = (
+            reduce(DataFrame.union, scans)
+            .groupBy("i", "p")
+            .agg(F.count(F.lit(1)), F.size(F.collect_set("url")))
+            .collect()
+        )
+        rows = []
+        for i, p, n_rows, n_urls in sorted(counts):
+            table, _, dur_ms, input_key = self.done[i]
+            rows.append((table, p, self.run_id, n_rows,
+                         n_urls if has_url[i] else -1, dur_ms, input_key))
+        if rows:  # empty when every committed snapshot is empty
             schema = StructType.fromDDL(LINEAGE_DDL)
             self.io.commit(
-                "_lineage", local_frame(self.spark, self.rows, schema),
-                self.run_id,
+                "_lineage", local_frame(self.spark, rows, schema), self.run_id
             )
 
 
 class Pipeline:
     """Checkpointed, resumable stage driver over a TableIO warehouse."""
 
-    STAGES = [
-        # (table, builder input tables)
-        ("docs", ["pages"]),
-        ("chunks", ["docs"]),
-        ("embeddings", ["chunks"]),
-        ("inverted_index", ["chunks"]),
-        ("extracted", ["chunks"]),
-        ("canonical", ["extracted"]),
-        ("kg_nodes", ["extracted", "canonical"]),
-        ("kg_edges", ["extracted", "kg_nodes", "canonical"]),
-    ]
+    STAGES = STAGES
 
     def __init__(
         self,
@@ -175,54 +214,10 @@ class Pipeline:
         embed_dim: int = 64,
     ):
         self.io = TableIO(warehouse)
-        self.link_mode = link_mode
-        self.salt = salt
-        self.chunk_size = chunk_size
-        self.chunk_overlap = chunk_overlap
-        self.embed_dim = embed_dim
-
-    # stage builders -------------------------------------------------------
-    def _map_stage_builder(self, table):
-        """Per-page map stages as upstream-DataFrame -> DataFrame fns
-        (shared by the batch and incremental paths)."""
-        if table == "docs":
-            return stages.extract_text
-        if table == "chunks":
-            return lambda docs: stages.chunk(
-                docs, self.chunk_size, self.chunk_overlap
-            )
-        if table == "embeddings":
-            return lambda chunks: stages.embed(chunks, self.embed_dim)
-        if table == "inverted_index":
-            return build_inverted_index
-        if table == "extracted":
-            return stages.extract
-        raise KeyError(table)
-
-    def _build(self, spark: SparkSession, table: str) -> DataFrame:
-        rd = lambda t: self.io.read(spark, t)  # noqa: E731
-        if table in ("docs", "chunks", "embeddings", "inverted_index",
-                     "extracted"):
-            upstream = dict(self.STAGES)[table][0]
-            return self._map_stage_builder(table)(rd(upstream))
-        if table == "canonical":
-            mentions = stages.mentions_of(rd("extracted"))
-            sim = linking.similarity_edges(mentions, mode=self.link_mode)
-            return cc.connected_components(
-                mentions.select("name").distinct(), sim
-            )
-        if table == "kg_nodes":
-            return stages.dedup_nodes(
-                stages.mentions_of(rd("extracted")), rd("canonical")
-            )
-        if table == "kg_edges":
-            return stages.materialize_edges(
-                stages.raw_edges_of(rd("extracted")),
-                rd("kg_nodes"),
-                rd("canonical"),
-                salt=self.salt,
-            )
-        raise KeyError(table)
+        self.params = dict(
+            link_mode=link_mode, salt=salt, chunk_size=chunk_size,
+            chunk_overlap=chunk_overlap, embed_dim=embed_dim,
+        )
 
     def run(
         self,
@@ -249,10 +244,14 @@ class Pipeline:
                 raise ValueError("pages DataFrame required for a fresh run")
             snaps["pages"] = self.io.commit("pages", pages, corpus_id)
 
+        def read(t: str) -> DataFrame:
+            return self.io.read(spark, t, snaps[t])
+
         for table, inputs in self.STAGES:
             input_key = ",".join(f"{t}:{snaps[t]}" for t in inputs)
             snaps[table] = log.stage(
-                table, input_key, lambda: self._build(spark, table)
+                table, input_key,
+                lambda: build_stage(table, read, **self.params),
             )
         log.commit()
         self.last_skipped = log.skipped
@@ -354,10 +353,11 @@ class Pipeline:
                 log.skipped.append(table)
                 continue
             input_key = ",".join(f"{upstream}:{p['id']}" for p in pending)
+            paths = [p["path"] for p in pending]
             snaps[table] = log.stage(
                 table, input_key,
-                lambda: self._map_stage_builder(table)(
-                    spark.read.parquet(*[p["path"] for p in pending])
+                lambda: build_stage(
+                    table, lambda _: spark.read.parquet(*paths), **self.params
                 ),
                 metadata={"mode": "append"},
             )
@@ -374,25 +374,17 @@ class Pipeline:
             # empty first delta): no merge to run
             self.last_skipped = log.skipped
             return snaps
-        extracted_all = self.io.read_accumulated(spark, "extracted")
-        mentions = stages.mentions_of(extracted_all)
-        merge_builders = {
-            "canonical": lambda: cc.connected_components(
-                mentions.select("name").distinct(),
-                linking.similarity_edges(mentions, mode=self.link_mode),
-            ),
-            "kg_nodes": lambda: stages.dedup_nodes(
-                mentions, self.io.read(spark, "canonical")
-            ),
-            "kg_edges": lambda: stages.materialize_edges(
-                stages.raw_edges_of(extracted_all),
-                self.io.read(spark, "kg_nodes"),
-                self.io.read(spark, "canonical"),
-                salt=self.salt,
-            ),
-        }
+
+        def read(t: str) -> DataFrame:
+            if t == "extracted":
+                return self.io.read_accumulated(spark, "extracted")
+            return self.io.read(spark, t, snaps[t])
+
         for table, _ in self.MERGE_STAGES:
-            snaps[table] = log.stage(table, acc_key, merge_builders[table])
+            snaps[table] = log.stage(
+                table, acc_key,
+                lambda: build_stage(table, read, **self.params),
+            )
         log.commit()
         self.last_skipped = log.skipped
         return snaps

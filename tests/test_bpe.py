@@ -135,32 +135,47 @@ def test_bpe_encode_vectorized_matches_literal(spark):
 
 
 def test_bpe_encode_vectorized_matches_literal_randomized(spark):
-    """Order-equivalence (rank-sequential regexp vs greedy-by-rank)
-    on adversarial short alphabets where merge chains stack deep —
-    including runs of repeated symbols, the left-to-right
-    non-overlapping edge case."""
+    """Seeded property test: JVM regexp chain == vectorized encoder ==
+    sequential encode_word, on adversarial short alphabets where merge
+    chains stack deep (runs of repeated symbols: the left-to-right
+    non-overlapping edge case) mixed with the JVM/Python boundary
+    characters — NBSP, NEL, U+2028/U+2029 (word bytes to Java's
+    ASCII-only \\s, separators to Python's), a combining mark, and
+    Turkish dotted/dotless I (U+0130 lowercases to two chars)."""
     import random
+    import re
 
+    from kgspark.bpe import encode_word
+
+    alphabet = "ab" * 4 + "\u00a0\u0085\u2028\u2029\u0301\u0130\u0131"
     rng = random.Random(5)
     texts = [
         " ".join(
-            "".join(rng.choice("ab") for _ in range(rng.randint(1, 12)))
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 12)))
             for _ in range(rng.randint(1, 20))
         )
-        for _ in range(40)
-    ] + ["aaaa aaaaa aaaaaa", "abab ababab", ""]
+        for _ in range(60)
+    ] + ["aaaa aaaaa aaaaaa", "abab ababab", "", "\u0130\u0130 a\u0301a\u0301"]
     docs = spark.createDataFrame(
         [(i, t, "en") for i, t in enumerate(texts)], DOCS_DDL
     )
     merges = [
         (r["left"], r["right"])
-        for r in bpe_train(docs, n_merges=8).orderBy("rank").collect()
+        for r in bpe_train(docs, n_merges=12).orderBy("rank").collect()
     ]
+    assert merges
     lit = {r["doc_id"]: r["n_bpe_tokens"]
            for r in bpe_encode(docs, merges, vectorized=False).collect()}
     vec = {r["doc_id"]: r["n_bpe_tokens"]
            for r in bpe_encode(docs, merges, vectorized=True).collect()}
-    assert lit == vec
+    # the sequential side splits on ASCII whitespace only, like Java \\s
+    ranks = {pair: i for i, pair in enumerate(merges)}
+    seq = {
+        i: sum(len(encode_word(w, ranks))
+               for w in re.split(r"[ \t\n\x0b\f\r]+", t.lower()) if w)
+        for i, t in enumerate(texts)
+    }
+    assert lit == vec == seq
 
 
 def test_bpe_encode_word_sequential_reference():

@@ -9,9 +9,7 @@ N = 40
 
 
 def _signatures(spark, partitions):
-    frames = build_kg_frames(
-        spark, pages_df(spark, N, partitions=partitions), cache=False
-    )
+    frames = build_kg_frames(spark, pages_df(spark, N, partitions=partitions))
     sig = {}
     sig["chunks"] = sorted(
         (r["chunk_id"], r["start_char"], r["text"])

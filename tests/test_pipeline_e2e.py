@@ -5,14 +5,16 @@ Asserts the north-rule invariants:
   * extracted text byte-identical per url,
   * chunks identical (incl. the start_char quirk),
   * triple P/R >= 0.95 (target 1.0 with exact-name linking),
-  * node set identical, canonicalization = identity under exact linking.
+  * node set identical, canonicalization = identity under exact linking,
+  * build_kg_frames and Pipeline.run (the two evaluators of the one
+    stage definition) commit the same rows, under exact and lsh linking.
 """
 
 import pytest
 
-from kgspark.fixtures import make_pages, pages_df
+from kgspark.fixtures import PAGES_DDL, make_pages, pages_df
 from kgspark.oracle import build_kg, extracted_text, precision_recall
-from kgspark.pipeline import build_kg_frames
+from kgspark.pipeline import Pipeline, build_kg_frames
 
 N_PAGES = 50
 
@@ -83,6 +85,80 @@ def test_nodes_match_oracle(frames, oracle_kg):
 def test_canonical_identity_under_exact_linking(frames):
     rows = frames["canonical"].collect()
     assert rows and all(r["name"] == r["canonical_id"] for r in rows)
+
+
+def _run_pipeline(spark, wh, pages, monkeypatch, **params):
+    """Pipeline.run, keeping the DataFrame each stage committed."""
+    pipe = Pipeline(wh, **params)
+    committed = {}
+    commit = pipe.io.commit
+
+    def spy(table, df, *a, **k):
+        committed[table] = df
+        return commit(table, df, *a, **k)
+
+    monkeypatch.setattr(pipe.io, "commit", spy)
+    pipe.run(spark, pages, "corpus")
+    return pipe, committed
+
+
+def _rows(df):
+    return sorted(
+        repr(tuple(sorted(v.items()) if isinstance(v, dict) else v for v in r))
+        for r in df.collect()
+    )
+
+
+def _scans(df, table):
+    return any(f"/{table}/" in f for f in df.inputFiles())
+
+
+def test_pipeline_run_matches_frames_exact(spark, tmp_path, monkeypatch,
+                                           frames):
+    """Under exact linking neither evaluator joins the canonical map
+    (identity by construction): Pipeline's committed kg_nodes and
+    kg_edges plans scan no canonical snapshot, and its rows equal
+    build_kg_frames'."""
+    pipe, committed = _run_pipeline(
+        spark, str(tmp_path / "wh"), pages_df(spark, N_PAGES, partitions=7),
+        monkeypatch, link_mode="exact", salt=4,
+    )
+    for table in ("kg_nodes", "kg_edges"):
+        assert _scans(committed[table], "extracted")
+        assert not _scans(committed[table], "canonical")
+    for table in ("canonical", "kg_nodes", "kg_edges"):
+        assert _rows(pipe.io.read(spark, table)) == _rows(frames[table])
+
+
+ALIAS_TEXTS = [
+    "Acme Corporation sues Northwind Bank over the loan.",
+    "Acme Corporatio cites Clean Air Act in the filing.",
+    "Northwind Bank represents Acme Corporation in court.",
+    "Globex Holdings violates Clean Air Act again.",
+]
+
+
+def test_pipeline_run_matches_frames_lsh(spark, tmp_path, monkeypatch):
+    """Under lsh linking both evaluators merge the near-duplicate pair
+    "Acme Corporation" / "Acme Corporatio" and commit the same
+    canonical, kg_nodes and kg_edges rows; Pipeline's plans keep the
+    canonical-map joins. The fixture corpus has no near-duplicate names,
+    so these pages carry their own."""
+    pages = spark.createDataFrame(
+        [(f"https://example.org/alias/doc{i}", None, None, t, "en")
+         for i, t in enumerate(ALIAS_TEXTS)],
+        PAGES_DDL,
+    )
+    frames = build_kg_frames(spark, pages, link_mode="lsh")
+    pipe, committed = _run_pipeline(
+        spark, str(tmp_path / "wh"), pages, monkeypatch, link_mode="lsh",
+    )
+    cid = {r["name"]: r["canonical_id"] for r in frames["canonical"].collect()}
+    assert cid["Acme Corporation"] == cid["Acme Corporatio"]
+    for table in ("kg_nodes", "kg_edges"):
+        assert _scans(committed[table], "canonical")
+    for table in ("canonical", "kg_nodes", "kg_edges"):
+        assert _rows(pipe.io.read(spark, table)) == _rows(frames[table])
 
 
 def test_mentions_reference_chunks(frames):
