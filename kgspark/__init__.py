@@ -25,3 +25,9 @@ TOP_K = 5             # reference default: src/builders/graphrag.py:22
 MAX_DEPTH = 2         # reference default: src/builders/graphrag.py:23
 VECTOR_WEIGHT = 0.7   # reference default: src/builders/graphrag.py:25
 KEYWORD_WEIGHT = 0.3  # reference default: src/builders/graphrag.py:26
+
+# Inside a Python worker task, stop re-reading every zip/jar directory on
+# each task (kgspark/pyworker.py); a no-op in any other process.
+from kgspark.pyworker import install_in_worker  # noqa: E402
+
+install_in_worker()

@@ -18,6 +18,15 @@ from pyspark.sql import DataFrame, functions as F
 
 SIM_EDGES_DDL = "name_a string, name_b string, score double, kind string"
 
+LINK_MODES = ("exact", "lsh")
+
+
+def check_link_mode(mode: str) -> None:
+    if mode not in LINK_MODES:
+        raise ValueError(
+            f"unknown link_mode {mode!r}; expected one of {LINK_MODES}"
+        )
+
 
 def exact_edges(names: DataFrame) -> DataFrame:
     """Self-pairs: every name links to itself (identity canonicalization)."""
@@ -151,8 +160,9 @@ def similarity_edges(
 
     Exact-name self-pairs are ALWAYS included (guarantees reference-
     parity merging); LSH pairs are additive when mode="lsh"
-    (SURVEY.md §7.2 M3).
+    (SURVEY.md §7.2 M3). Any other mode raises ValueError.
     """
+    check_link_mode(mode)
     names = mentions.select("name").distinct()
     edges = exact_edges(names)
     if mode == "lsh":

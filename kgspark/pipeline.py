@@ -213,6 +213,7 @@ class Pipeline:
         chunk_overlap: int = 100,
         embed_dim: int = 64,
     ):
+        linking.check_link_mode(link_mode)
         self.io = TableIO(warehouse)
         self.params = dict(
             link_mode=link_mode, salt=salt, chunk_size=chunk_size,

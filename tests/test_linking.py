@@ -1,9 +1,11 @@
 """Entity linking: exact mode = self-pairs only; LSH mode finds
 near-duplicate names via minhash-banded blocking + exact Jaccard."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgspark.linking import lsh_candidate_edges, similarity_edges
+from kgspark.pipeline import Pipeline
 
 MENTIONS_DDL = "name string, url string, chunk_index int"
 
@@ -60,3 +62,17 @@ def test_lsh_mode_merges_aliases_through_cc(spark):
     got = {r["name"]: r["canonical_id"] for r in canon.collect()}
     assert got["Acme Corporation"] == got["Acme Corporatio"]
     assert got["Northwind Bank"] == "Northwind Bank"
+
+
+def test_unknown_link_mode_fails_loudly(spark, tmp_path):
+    """A mode outside {"exact", "lsh"} is an error in both places that
+    read it: a case typo used to link exact-only in similarity_edges
+    while the Pipeline joined the canonical map as if it were lsh."""
+    m = _mentions(spark, ["Acme Corp"])
+    for mode in ("LSH", "Exact", "", "minhash"):
+        with pytest.raises(ValueError, match="link_mode"):
+            similarity_edges(m, mode=mode)
+        with pytest.raises(ValueError, match="link_mode"):
+            Pipeline(str(tmp_path / "wh"), link_mode=mode)
+    assert Pipeline(str(tmp_path / "wh"), link_mode="lsh").params[
+        "link_mode"] == "lsh"
