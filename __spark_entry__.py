@@ -957,11 +957,11 @@ def _q_snapshot_cdc_diff(spark, sf_dir):
 
 
 def _q_bpe_merges(spark, sf_dir):
-    """Distributed BPE tokenizer training (10 merges) over the corpus
-    word-frequency table: pair counting is one map-side-combinable agg
-    per round on VOCAB-cardinality rows (the corpus is scanned once,
-    up front); merge rewrite is a JVM regexp_replace. Deterministic
-    (count desc, pair asc) tie-break. Iterative driver loop — not
+    """BPE tokenizer training (10 merges) over the corpus
+    word-frequency table: the corpus is scanned once, the distinct-word
+    table is collected, and the merges are learned in driver memory
+    with incremental pair counts. Deterministic (count desc,
+    "left right" asc) tie-break. Iterative merge loop — not
     SQL-expressible; pytest checks parity with a sequential reference
     BPE implementation."""
     from kgspark.bpe import bpe_train
@@ -972,12 +972,12 @@ def _q_bpe_merges(spark, sf_dir):
 def _q_bpe_encode(spark, sf_dir):
     """BPE encode/apply (r5): tokenize the corpus with its own trained
     merge list — the step a training-data pipeline runs over 100% of
-    bytes — via the production mapInPandas path (broadcast rank dict,
-    greedy merge per word inside each Arrow batch, per-batch word
-    cache). Rows-only: training is an iterative driver loop, so no
-    static SQL oracle; pytest pins (a) parity with the JVM regexp-
-    chain path, (b) parity with a sequential Python encoder, (c)
-    token-count reconciliation invariants. SELF-CHECKING columns: the
+    bytes — via the mapInPandas encoder (broadcast rank dict, greedy
+    merge per word inside each Arrow batch, per-batch word cache).
+    Rows-only: training is an iterative merge loop, so no static SQL
+    oracle; pytest pins (a) parity with a sequential Python encoder
+    on seeded unicode text, (b) token-count reconciliation
+    invariants. SELF-CHECKING columns: the
     driver hash covers per-doc bounds_ok = n_words <= n_bpe_tokens <=
     n_chars, so a broken encoder flips hashed values, not just
     unchecked counts."""
@@ -989,7 +989,7 @@ def _q_bpe_encode(spark, sf_dir):
         (r["left"], r["right"])
         for r in bpe_train(docs, n_merges=10).orderBy("rank").collect()
     ]
-    enc = bpe_encode(docs, merges, vectorized=True)
+    enc = bpe_encode(docs, merges)
     bounds = docs.select(
         "doc_id",
         F.size(

@@ -107,10 +107,8 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
     # concurrency to physical cores instead of 2x-oversubscribing
     # (measured 26% faster at local[32] on the heavy-page corpus).
     # KGSPARK_BENCH_TASK_CPUS forces a fixed task width at EVERY level —
-    # the scaling protocol sets 2 so a "slot" (JVM thread + Python
-    # worker) costs the same cores at local[2] and local[8]; otherwise
-    # the small level is flattered by Python workers borrowing idle
-    # host cores outside its nominal budget.
+    # tools/bench_scaling.py sets 1, so both levels of a scaling run
+    # use the same width whatever their core count.
     forced = os.environ.get("KGSPARK_BENCH_TASK_CPUS")
     if forced:
         extra = {"spark.task.cpus": forced}
@@ -472,10 +470,7 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
         # r5-new: encode the corpus with its trained merges — the step
         # a pipeline runs over 100% of bytes. Training happens OUTSIDE
         # the timed closure (it is already timed as bpe_train_seg);
-        # the segment measures only the mapInPandas encoder (the
-        # production-vocabulary path, forced here so the bench
-        # exercises the Arrow-batched kernel, not the 5-rule regexp
-        # chain).
+        # the segment measures only the mapInPandas encoder.
         from kgspark.bpe import bpe_encode, bpe_train  # noqa: PLC0415
 
         bpe_merges_for_encode = [
@@ -484,9 +479,9 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
         ]
 
         def bpe_encode_seg():
-            bpe_encode(
-                docs, bpe_merges_for_encode, vectorized=True
-            ).agg(F.sum("n_bpe_tokens")).collect()
+            bpe_encode(docs, bpe_merges_for_encode).agg(
+                F.sum("n_bpe_tokens")
+            ).collect()
 
         timed("bpe_encode", bpe_encode_seg)
 

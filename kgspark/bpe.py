@@ -1,5 +1,5 @@
-"""Distributed BPE tokenizer training — learn merge rules over the
-corpus word-frequency table.
+"""BPE tokenizer — learn merge rules over the corpus word-frequency
+table, then count each document's tokens under them.
 
 The reference repo ships no tokenizer stage (its chunks go straight to
 an external LLM, /root/reference/src/builders/graphrag.py); a
@@ -7,44 +7,43 @@ training-data engine needs one: the merge table a BPE learner emits is
 the vocabulary artifact every downstream token-count / packing /
 contamination op keys on.
 
-Design (classic Sennrich BPE, Spark-first):
+Design (classic Sennrich BPE):
 
-* Training state is the DISTINCT-WORD frequency table, not the corpus
-  — one corpus-sized shuffle up front (word counts, map-side
-  combinable), then every iteration touches only vocab-cardinality
-  rows. At 10^12 documents the vocab table is ~10^7-10^8 rows; the
-  corpus is never rescanned.
-* Words are held as SPACE-JOINED symbol strings ("l o w e r"), so the
-  per-iteration merge rewrite is one JVM `regexp_replace` — greedy
-  left-to-right non-overlapping, exactly the sequential BPE merge
-  order — with `\\Q..\\E`-quoted symbols so arbitrary punctuation
-  survives. No Python in the loop.
-* Pair counting: split -> adjacent-pair explode weighted by word
-  count -> one map-side-combinable agg; the argmax pair is a 1-row
-  TakeOrdered with a DETERMINISTIC tie-break (max count, then
-  lexicographically smallest pair), so the learned merge list is
-  stable across cluster sizes and engines.
-* One driver round-trip per merge (the argmax row) — k merges = k
-  tiny collects, the same driver-loop shape as pagerank/kmeans
-  iterations. `localCheckpoint` per round truncates lineage.
+* Training state is the DISTINCT-WORD frequency table, not the corpus:
+  `word_freq_table` is the one corpus-sized pass (JVM `norm_text`,
+  split on spaces, map-side-combinable count). Its rows are collected
+  to the driver and the merges are learned there in memory, so
+  training runs a constant number of Spark jobs whatever `n_merges`
+  is.
+* Driver memory is O(distinct words). A caller bounds it by sampling
+  the `documents` frame it passes in; no cap is applied here.
+* The in-memory learner keeps incremental pair counts: a pair -> count
+  table plus a pair -> word-index map, and each merge rewrites only
+  the words that contain the chosen pair. Symbols are code points
+  (`list(word)`); pairs are counted at every adjacent position
+  ("aaaa" gives (a, a) x3); a merge is greedy left to right and
+  non-overlapping. The chosen pair is the most frequent one, ties
+  broken by the smallest "left right" string — the order Spark's
+  `orderBy` gives the joined pair — so the merge list does not depend
+  on partitioning or on the order `collect` returns rows in.
+* Encoding is one Arrow-batched mapInPandas pass against a broadcast
+  (left, right) -> rank dict, with a per-batch word cache.
 """
 
 from __future__ import annotations
+
+import math
+import re
+from collections import Counter, defaultdict
 
 from pyspark.sql import DataFrame, functions as F
 
 from kgspark.dataops import norm_text
 
-
-def _java_quote(sym: str) -> str:
-    """Literal-quote a symbol for a Java regex (\\Q..\\E, with the
-    embedded-\\E edge case split)."""
-    return "\\Q" + sym.replace("\\E", "\\E\\\\E\\Q") + "\\E"
-
-
-def _repl_quote(sym: str) -> str:
-    """Quote a replacement string for Java Matcher (backslash, $)."""
-    return sym.replace("\\", "\\\\").replace("$", "\\$")
+# Java's \s (inside norm_text) is ASCII-only: NBSP, NEL and U+2028 are
+# word characters to the JVM, so the Python side splits on this class
+# and never on Python's unicode \s
+_ASCII_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def word_freq_table(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -60,6 +59,20 @@ def word_freq_table(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _merge(syms: list[str], left: str, right: str) -> list[str]:
+    """Replace every left-to-right non-overlapping (left, right)."""
+    out: list[str] = []
+    i = 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
 def bpe_train(
     documents: DataFrame,
     n_merges: int = 10,
@@ -68,201 +81,83 @@ def bpe_train(
 ) -> DataFrame:
     """Learn `n_merges` BPE merge rules from the corpus. Returns the
     merge table (rank, left, right, merged, pair_count) in learned
-    order — deterministic under the (count desc, pair asc) tie-break.
-    Stops early when no pair reaches `min_count`.
+    order — deterministic under the (count desc, "left right" asc)
+    tie-break. Stops early when no pair reaches `min_count`.
     """
-    spark = documents.sparkSession
-    vocab = (
-        word_freq_table(documents, text_col)
-        .select(
-            # "lower" -> "l o w e r": symbols space-joined. \z not $:
-            # Java's $ also matches before a final line terminator,
-            # which would glue a trailing U+2028/U+2029/U+0085 to the
-            # last symbol (see bpe_encode's splitter)
-            F.concat_ws(
-                " ", F.split(F.col("word"), r"(?!\z)")
-            ).alias("syms"),
-            "n",
-        )
-        .localCheckpoint(eager=True)
-    )
+    rows = word_freq_table(documents, text_col).collect()
+    words = [list(r["word"]) for r in rows]
+    freq = [r["n"] for r in rows]
+    counts: Counter = Counter()
+    where: defaultdict = defaultdict(set)  # pair -> indexes of words
+    for i, syms in enumerate(words):
+        for pair in zip(syms, syms[1:]):
+            counts[pair] += freq[i]
+            where[pair].add(i)
     merges = []
-    for rank in range(n_merges):
-        symarr = F.split(F.col("syms"), " ")
-        # adjacent pairs via zip_with over two shifted slices — empty
-        # for 1-symbol words (sequence(1, 0) would count DOWN under
-        # Spark's auto-negative step and ANSI element_at would throw)
-        tail_len = F.greatest(F.size(symarr) - 1, F.lit(0))
-        pairs = vocab.select(
-            F.explode(
-                F.zip_with(
-                    F.slice(symarr, 1, tail_len),
-                    F.slice(symarr, 2, tail_len),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                )
-            ).alias("pair"),
-            "n",
-        )
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("n").alias("c"))
-            .orderBy(F.col("c").desc(), F.col("pair").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["c"] < min_count:
+    while len(merges) < n_merges and counts:
+        top = max(counts.values())
+        if top < min_count:
             break
-        left, right = top[0]["pair"].split(" ")
-        merged = left + right
-        merges.append((rank, left, right, merged, int(top[0]["c"])))
-        pat = (
-            "(^|[ ])"
-            + _java_quote(left)
-            + " "
-            + _java_quote(right)
-            + r"(?=[ ]|\z)"
+        left, right = min(
+            (p for p, c in counts.items() if c == top),
+            key=lambda p: f"{p[0]} {p[1]}",
         )
-        vocab = vocab.select(
-            F.regexp_replace(
-                F.col("syms"), pat, "$1" + _repl_quote(merged)
-            ).alias("syms"),
-            "n",
-        ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
+        merges.append((len(merges), left, right, left + right, top))
+        # `where` may list words a previous merge rewrote; _merge leaves
+        # those unchanged and the count updates below cancel out
+        for i in where.pop((left, right)):
+            old, words[i] = words[i], _merge(words[i], left, right)
+            for pair in zip(old, old[1:]):
+                counts[pair] -= freq[i]
+            for pair in zip(words[i], words[i][1:]):
+                counts[pair] += freq[i]
+                where[pair].add(i)
+            for pair in zip(old, old[1:]):
+                if counts[pair] == 0:
+                    del counts[pair]
+    return documents.sparkSession.createDataFrame(
         merges,
         "rank int, left string, right string, merged string,"
         " pair_count bigint",
     )
 
 
-# Above this many merge rules the regexp-chain encode path is replaced
-# by the broadcast-dict mapInPandas encoder: each rule is one nested
-# regexp_replace Catalyst node, so a production vocabulary (32k merges)
-# would build a 32k-deep expression tree inside a transform lambda —
-# the same codegen-blowup class as LITERAL_MATH_MAX_TERMS in dataops.
-# The literal path stays the default below the threshold because it is
-# fully JVM-side (no Python in the plan).
-BPE_LITERAL_MAX_RULES = 128
+def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
+    """Sequential greedy BPE encode of one word (the encoder's per-word
+    kernel — also the pytest reference): repeatedly merge every
+    left-to-right non-overlapping occurrence of the lowest-rank
+    adjacent pair present."""
+    syms = list(word)
+    while len(syms) > 1:
+        pair = min(
+            zip(syms, syms[1:]), key=lambda p: ranks.get(p, math.inf)
+        )
+        if pair not in ranks:
+            break
+        syms = _merge(syms, *pair)
+    return syms
 
 
 def bpe_encode(
     documents: DataFrame,
     merge_rules: list[tuple[str, str]],
     text_col: str = "text",
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """Apply a learned merge list to the corpus: per-doc BPE token
     count (the "tokens under MY tokenizer" accounting every data-mix
     budget needs — the one step a training pipeline runs over 100% of
-    bytes). Two physical strategies, same semantics:
+    bytes). One mapInPandas pass, no shuffle: classic greedy BPE per
+    word inside each Arrow batch against a broadcast (left,right)->rank
+    dict, with a per-batch word cache (corpus word frequency is
+    zipfian, so the cache absorbs almost every lookup).
 
-      * regexp chain (default below BPE_LITERAL_MAX_RULES): one JVM
-        regexp_replace per merge composed into ONE projection — zero
-        shuffle, column-pruned scan, no Python;
-      * broadcast-dict mapInPandas (default above the threshold — the
-        production path at 32k-merge vocabularies): classic greedy BPE
-        per word inside each Arrow batch against a broadcast
-        (left,right)->rank dict, with a per-batch word cache (corpus
-        word frequency is zipfian, so the cache absorbs almost every
-        lookup). Still zero shuffle; Arrow-batched, never per-row.
-
-    Equivalence of the two orders (regexp applies rules 0..k-1 each
-    globally; greedy repeatedly merges the lowest-rank pair present)
-    holds because a pair learned at rank r is composed of symbols
-    created strictly before r — a rank-r adjacency can never be
-    CREATED by a later merge, so full application in rank order finds
-    exactly the pairs greedy-by-rank finds (pytest asserts parity on
-    both fixed and randomized corpora).
-
-    PRECONDITION: `merge_rules` must be a training-order list (what
-    `bpe_train` emits, ordered by rank) — the equivalence argument
-    above is a property OF that order. A hand-built list where an
-    earlier rule's parts are only created by a later rule (e.g.
-    [("ab","c"), ("a","b")]) is not a valid BPE merge table, and the
-    two physical paths may legitimately disagree on it."""
-    if vectorized is None:
-        vectorized = len(merge_rules) > BPE_LITERAL_MAX_RULES
-    if vectorized:
-        return _bpe_encode_vectorized(documents, merge_rules, text_col)
-
-    def _word_token_count(w):
-        # \z (end of INPUT), not $: Java's $ also matches BEFORE a
-        # final line terminator (U+2028/U+2029/U+0085 survive the
-        # ASCII-only \s+ collapse), which would glue a trailing one to
-        # the last symbol and diverge from the greedy per-char encoder
-        col = F.concat_ws(" ", F.split(w, r"(?!\z)"))
-        for left, right in merge_rules:
-            pat = (
-                "(^|[ ])"
-                + _java_quote(left)
-                + " "
-                + _java_quote(right)
-                + r"(?=[ ]|\z)"
-            )
-            col = F.regexp_replace(
-                col, pat, "$1" + _repl_quote(left + right)
-            )
-        return F.size(F.split(col, " "))
-
-    words = F.filter(
-        F.split(norm_text(F.col(text_col)), " "), lambda w: w != ""
-    )
-    per_word = F.transform(words, _word_token_count)
-    return documents.select(
-        "doc_id",
-        F.aggregate(
-            per_word, F.lit(0), lambda acc, x: acc + x
-        ).cast("bigint").alias("n_bpe_tokens"),
-    )
-
-
-def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
-    """Sequential greedy BPE encode of one word (driver-side twin of
-    the distributed encoder — also the pytest reference): repeatedly
-    merge every left-to-right non-overlapping occurrence of the
-    lowest-rank adjacent pair present."""
-    syms = list(word)
-    while len(syms) > 1:
-        best = None
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best is None or r < best):
-                best = r
-        if best is None:
-            break
-        out: list[str] = []
-        i = 0
-        while i < len(syms):
-            if (
-                i + 1 < len(syms)
-                and ranks.get((syms[i], syms[i + 1])) == best
-            ):
-                out.append(syms[i] + syms[i + 1])
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    return syms
-
-
-def _bpe_encode_vectorized(
-    documents: DataFrame,
-    merge_rules: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
-    """mapInPandas BPE encode against a broadcast rank dict — the
-    production-vocabulary path (see bpe_encode). Normalization matches
-    norm_text bit-for-bit: Java \\s is ASCII-only, so the Python twin
-    uses the explicit ASCII whitespace class, not Python's unicode
-    \\s."""
-    import re as _re  # noqa: PLC0415
-
+    Normalization matches `norm_text`: lowercase, collapse ASCII
+    whitespace, strip spaces only (F.trim), so unicode whitespace stays
+    inside words exactly as it does in `word_freq_table`."""
     ranks = {
         (left, right): i for i, (left, right) in enumerate(merge_rules)
     }
     bc = documents.sparkSession.sparkContext.broadcast(ranks)
-    ws = _re.compile(r"[ \t\n\x0b\f\r]+")
 
     def encode_batches(batches):
         import pandas as pd  # noqa: PLC0415
@@ -284,7 +179,7 @@ def _bpe_encode_vectorized(
                 # spaces, and Python's default strip() would eat the
                 # unicode whitespace (NBSP, NEL, U+2028) that Java's
                 # ASCII-only \s deliberately leaves in place
-                norm = ws.sub(
+                norm = _ASCII_WS.sub(
                     " ", ("" if t is None else t).lower()
                 ).strip(" ")
                 counts.append(

@@ -23,6 +23,10 @@ real Common-Crawl size) so per-doc compute dominates fixed overhead.
 
 Usage:
     python tools/bench_scaling.py [sf_dir] [--repeats R] [--pages N]
+        [--mode pinned|cluster]
+
+`pinned` (default) cpuset-pins the whole spark-submit process tree to
+N and 4N cores; `cluster` runs 1 vs 4 real executor JVMs.
 """
 
 from __future__ import annotations
@@ -46,21 +50,21 @@ def make_zip(out: Path) -> Path:
 
 
 def run_once(sf_dir: str, cpus: int, zip_path: Path, n_pages: int,
-             sent_scale: int, mode: str = "equalized") -> dict:
+             sent_scale: int, mode: str = "pinned") -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
     env["KGSPARK_BENCH_PAGES"] = str(n_pages)
     env["KGSPARK_BENCH_SENT_SCALE"] = str(sent_scale)
     # scaling runs time the r2-comparable headline segments only
     env["KGSPARK_BENCH_SKIP_EXTRAS"] = "1"
+    env["KGSPARK_BENCH_TASK_CPUS"] = "1"
     if mode == "cluster":
         # memory-bounded executors (4-6 GB): fine initial shuffle
         # partitions stop the index-agg spill (zero post-fix,
         # BENCH/profile_cluster.md); set at BOTH levels so the
-        # comparison is conf-identical. The single-JVM modes (pinned/
-        # raw/equalized, 16 GB driver) never spill — they keep the
-        # engine default, which also keeps them comparable with the
-        # r1-r3 readings.
+        # comparison is conf-identical. The single-JVM pinned mode
+        # (16 GB driver) never spills — it keeps the engine default,
+        # which also keeps it comparable with the r1-r3 readings.
         env.setdefault("KGSPARK_AQE_INITIAL_FACTOR", "4")
         env.setdefault("KGSPARK_AQE_INITIAL_MIN", "64")
         # shuffle bytes, not CPU, bound this deployment's index build:
@@ -70,10 +74,9 @@ def run_once(sf_dir: str, cpus: int, zip_path: Path, n_pages: int,
         # pipeline+index N->4N efficiency 0.78 -> 0.90 (r5 codec A/B,
         # BENCH/scaling_cluster.md); at the disk-unbound 1-executor
         # level the codecs are within noise, so zstd is strictly the
-        # right default for the disk-shared regime. Single-JVM modes
-        # keep lz4 (CPU-bound; zstd's compression CPU is pure cost).
+        # right default for the disk-shared regime. Single-JVM pinned
+        # mode keeps lz4 (CPU-bound; zstd's compression CPU is pure cost).
         env.setdefault("KGSPARK_IO_CODEC", "zstd")
-    if mode == "cluster":
         # REAL executor JVMs: local-cluster[n,2,mem] spawns n separate
         # executor processes with 2 cores each — each executor owns its
         # cores (Python workers included), so slot cost is equal at
@@ -81,24 +84,15 @@ def run_once(sf_dir: str, cpus: int, zip_path: Path, n_pages: int,
         master = f"local-cluster[{cpus},2,6144]"
         env["SPARK_GRAFT_CPUS"] = str(cpus * 2)  # shuffle partitions
         env["KGSPARK_BENCH_MASTER"] = master
-        env["KGSPARK_BENCH_TASK_CPUS"] = "1"
         extra = ["--conf", "spark.executor.memory=4g"]
     else:
         master = f"local[{cpus}]"
         env["SPARK_GRAFT_CPUS"] = str(cpus)
-        # equalized: one slot = JVM thread + Python worker = 2 cores at
-        # BOTH levels (1 slot vs 4 slots = the N -> 4N proxy). raw: no
-        # task sizing — the small level's Python workers borrow idle
-        # host cores, understating efficiency (see BENCH/BASELINE.md).
-        # pinned: no task sizing either, but the WHOLE process tree
-        # (JVM + forked Python workers) is cpuset-pinned to exactly
-        # `cpus` physical cores via taskset, so the small level cannot
-        # borrow host cores (raw's bias) and no slot arithmetic skews
-        # the big level (equalized's bias) — the cleanest N -> 4N cap
-        # this host can express.
-        env["KGSPARK_BENCH_TASK_CPUS"] = (
-            "2" if mode == "equalized" else "1"
-        )
+        # pinned: no task sizing, and the WHOLE process tree (JVM +
+        # forked Python workers) is cpuset-pinned to exactly `cpus`
+        # physical cores via taskset, so the small level cannot borrow
+        # host cores and no slot arithmetic skews the big level — the
+        # cleanest N -> 4N cap one host can express.
         extra = []
     cmd = [
         "spark-submit",
@@ -136,10 +130,10 @@ def main() -> None:
     if "--pages" in sys.argv:
         n_pages = int(sys.argv[sys.argv.index("--pages") + 1])
     sent_scale = int(os.environ.get("KGSPARK_BENCH_SENT_SCALE", "10"))
-    mode = "equalized"
+    mode = "pinned"
     if "--mode" in sys.argv:
         mode = sys.argv[sys.argv.index("--mode") + 1]
-    if mode not in ("equalized", "raw", "cluster", "pinned"):
+    if mode not in ("cluster", "pinned"):
         raise SystemExit(f"unknown --mode {mode}")
     # cluster mode: levels are EXECUTOR counts (x2 cores each);
     # otherwise core counts for local[N]
@@ -196,11 +190,6 @@ def main() -> None:
     bench_dir.mkdir(exist_ok=True)
     md = bench_dir / f"scaling_{mode}.md"
     proto_desc = {
-        "equalized": "`local[2]` vs `local[8]`, `spark.task.cpus=2` at "
-        "both levels (1 slot vs 4 slots; removes the small level's "
-        "idle-core borrowing, slightly overstates)",
-        "raw": "`local[2]` vs `local[8]`, no task sizing (the 2-core "
-        "level's Python workers borrow idle host cores — understates)",
         "pinned": "`taskset -c 0-1 spark-submit --master local[2]` vs "
         "`taskset -c 0-7 ... local[8]` — the WHOLE process tree (JVM + "
         "forked Python workers) cpuset-pinned to exactly N physical "
