@@ -1707,7 +1707,8 @@ def _q_dataset_split(spark, sf_dir):
 def _q_part_triangles(spark, sf_dir):
     """Triangle count over the parts-co-ordered-together graph
     (edge = two parts appearing in the same order): degree-ordered
-    orientation + wedge join (kgspark.cc.triangle_count) — the scale
+    orientation + edge-iterator adjacency intersection
+    (kgspark.cc.triangle_count) — the scale
     path whose count the oracle verifies with plain a<b<c SQL (the
     count is orientation-invariant). The co-order self-join shuffles
     on orderkey with per-order fanout C(items, 2), bounded by order
@@ -1715,7 +1716,7 @@ def _q_part_triangles(spark, sf_dir):
     from kgspark.cc import co_order_pairs, triangle_count
 
     pairs = co_order_pairs(_read(spark, sf_dir, "lineitem"))
-    return triangle_count(pairs, orient="degree")
+    return triangle_count(pairs)
 
 
 def _q_part_link_prediction(spark, sf_dir):

@@ -427,9 +427,7 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
             from kgspark.cc import co_order_pairs, triangle_count  # noqa: PLC0415
             from kgspark.dataops import kmeans_train  # noqa: PLC0415
 
-            triangle_count(
-                co_order_pairs(read("lineitem")), orient="degree"
-            ).count()
+            triangle_count(co_order_pairs(read("lineitem"))).count()
             kmeans_train(read("embeddings"), k=16, n_iter=3)
 
         timed("graph_mining", graph_mining)

@@ -262,8 +262,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    orient: str = "degree",
-    method: str = "adj",
 ) -> DataFrame:
     """Distributed triangle counting over an undirected edge list —
     the third classic graph-analytics op next to connected_components
@@ -271,33 +269,19 @@ def triangle_count(
     signal over the constructed KG).
 
     Input edges are canonicalized (undirected, self-loops dropped,
-    deduped). Each triangle is counted exactly once by orienting every
-    edge and closing wedges:
+    deduped). Each edge is then oriented from its lower-(degree, id)
+    endpoint to the higher one, so every node's out-degree is
+    O(sqrt(|E|)) — the standard bound that caps the per-node fanout
+    even on power-law graphs, where id-ordering would let one hub
+    generate O(deg^2) wedges.
 
-      * orient="degree" (the scale path): orient each edge from its
-        lower-(degree, id) endpoint to the higher one. Every node's
-        out-degree is then O(sqrt(|E|)) — the standard bound that caps
-        the wedge-join fanout even on power-law graphs, where id-
-        ordering would let one hub generate O(deg^2) wedges.
-      * orient="id": orient low id -> high id (the naive variant kept
-        for tests/oracle parity — same count by symmetry).
-
-    Counting method (both orientation-invariant, so the DuckDB oracle
-    verifies either with plain a<b<c SQL):
-
-      * method="adj" (default, the scale path): edge-iterator — build
-        per-node sorted out-adjacency arrays (out-degree is bounded by
-        the orientation), join each oriented edge to its endpoints'
-        arrays, count = sum of |N+(lo) & N+(hi)| via one JVM
-        array_intersect per edge. Shuffle volume is O(|E|) rows (plus
-        the two array joins), never the wedge set.
-      * method="wedge": materialize wedges (a->b)x(b->c) on b, then
-        semi-join against the closing edge set — the textbook plan,
-        kept for parity tests; its shuffle is sum(outdeg^2) rows
-        (~72M vs |E|=1.2M on the sf0.1 co-order graph; measured
-        13.0s vs 9.5s there same-session, and the gap widens with
-        density since wedge volume grows quadratically in degree
-        while adj volume stays linear in edges).
+    Counting is edge-iterator: build per-node sorted out-adjacency
+    arrays, join each oriented edge to its endpoints' arrays, count =
+    sum of |N+(lo) & N+(hi)| via one JVM array_intersect per edge.
+    Shuffle volume is O(|E|) rows (plus the two array joins), never
+    the wedge set (~72M rows vs |E|=1.2M on the sf0.1 co-order
+    graph). The count is orientation-invariant, so the DuckDB oracle
+    verifies it with plain a<b<c SQL.
 
     Returns one row: (n_nodes, n_edges, n_triangles).
     """
@@ -315,58 +299,36 @@ def triangle_count(
         und.select(F.col("b").alias("v"))
     ).distinct()
     n_nodes = nodes.count()
-    if orient == "degree":
-        deg = (
-            und.select(F.col("a").alias("v"))
-            .union(und.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("deg"))
-        )
-        da = deg.select(F.col("v").alias("a"), F.col("deg").alias("dega"))
-        db = deg.select(F.col("v").alias("b"), F.col("deg").alias("degb"))
-        keyed = und.join(da, "a").join(db, "b")
-        fwd = F.struct("dega", "a") < F.struct("degb", "b")
-        oriented = keyed.select(
-            F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("lo"),
-            F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("hi"),
-        )
-    elif orient == "id":
-        oriented = und.select(
-            F.col("a").alias("lo"), F.col("b").alias("hi")
-        )
-    else:  # pragma: no cover - guarded by tests
-        raise ValueError(f"unknown orient: {orient}")
-    oriented = oriented.localCheckpoint(eager=True)
-    if method == "adj":
-        # edge-iterator: tri({a<b<c}) is counted exactly once, on its
-        # apex edge (a,b), as |N+(a) & N+(b)| — the closing sink c is
-        # an out-neighbor of both; the other two edges of the triangle
-        # contribute nothing (c has no out-edge into the triangle).
-        # This replaces the wedge join's sum(outdeg^2)-row shuffle
-        # (~72M rows on the sf0.1 co-order graph) with |E| rows x one
-        # sorted-array intersection each.
-        adj = oriented.groupBy(F.col("lo").alias("v")).agg(
-            F.sort_array(F.collect_list("hi")).alias("nbrs")
-        )
-        au = adj.select(F.col("v").alias("lo"), F.col("nbrs").alias("nu"))
-        av = adj.select(F.col("v").alias("hi"), F.col("nbrs").alias("nv"))
-        tri = (
-            oriented.join(au, "lo")
-            .join(av, "hi")
-            .select(
-                F.size(F.array_intersect("nu", "nv")).alias("c")
-            )
-            .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("t"))
-            .first()["t"]
-        )
-    else:
-        e1 = oriented.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-        e2 = oriented.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-        wedges = e1.join(e2, "y").select("x", "z")
-        closing = oriented.select(
-            F.col("lo").alias("x"), F.col("hi").alias("z")
-        )
-        tri = wedges.join(closing, ["x", "z"], "inner").count()
+    deg = (
+        und.select(F.col("a").alias("v"))
+        .union(und.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count("*").alias("deg"))
+    )
+    da = deg.select(F.col("v").alias("a"), F.col("deg").alias("dega"))
+    db = deg.select(F.col("v").alias("b"), F.col("deg").alias("degb"))
+    keyed = und.join(da, "a").join(db, "b")
+    fwd = F.struct("dega", "a") < F.struct("degb", "b")
+    oriented = keyed.select(
+        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("lo"),
+        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("hi"),
+    ).localCheckpoint(eager=True)
+    # tri({a<b<c}) is counted exactly once, on its apex edge (a,b), as
+    # |N+(a) & N+(b)| — the closing sink c is an out-neighbor of both;
+    # the other two edges of the triangle contribute nothing (c has no
+    # out-edge into the triangle).
+    adj = oriented.groupBy(F.col("lo").alias("v")).agg(
+        F.sort_array(F.collect_list("hi")).alias("nbrs")
+    )
+    au = adj.select(F.col("v").alias("lo"), F.col("nbrs").alias("nu"))
+    av = adj.select(F.col("v").alias("hi"), F.col("nbrs").alias("nv"))
+    tri = (
+        oriented.join(au, "lo")
+        .join(av, "hi")
+        .select(F.size(F.array_intersect("nu", "nv")).alias("c"))
+        .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("t"))
+        .first()["t"]
+    )
     spark = edges.sparkSession
     return spark.createDataFrame(
         [(int(n_nodes), int(n_edges), int(tri))],

@@ -536,6 +536,23 @@ def ivf_assign(
     return embeddings.select(*cols)
 
 
+def _probe_cells(
+    centroids: list[list[float]], query_vec: list[float], n_probe: int
+) -> list[int]:
+    """The n_probe cells whose centroids are nearest the query by
+    cosine, scored on the driver (the centroid list is tiny); ties
+    keep the lower cell id."""
+    def cos(a: list[float], b: list[float]) -> float:
+        dot = sum(x * y for x, y in zip(a, b))
+        na = sum(x * x for x in a) ** 0.5 or 1.0
+        nb = sum(x * x for x in b) ** 0.5 or 1.0
+        return dot / (na * nb)
+
+    return sorted(
+        range(len(centroids)), key=lambda i: -cos(centroids[i], query_vec)
+    )[:n_probe]
+
+
 def ivf_ann(
     embeddings: DataFrame,
     centroids: list[list[float]],
@@ -548,15 +565,7 @@ def ivf_ann(
     driver (tiny), then exact cosine only inside the n_probe nearest
     cells. Partition-prunable when the assignment table is written
     partitioned by cell."""
-    def cos(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5 or 1.0
-        nb = sum(x * x for x in b) ** 0.5 or 1.0
-        return dot / (na * nb)
-
-    probe = sorted(
-        range(len(centroids)), key=lambda i: -cos(centroids[i], query_vec)
-    )[:n_probe]
+    probe = _probe_cells(centroids, query_vec, n_probe)
     assigned = ivf_assign(embeddings, centroids, vectorized=vectorized)
     from .query import cosine_score  # noqa: PLC0415
 
@@ -620,16 +629,7 @@ def ivf_query(
     from .query import cosine_score  # noqa: PLC0415
 
     cents = io.snapshot_metadata(table, snapshot)["centroids"]
-
-    def cos(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5 or 1.0
-        nb = sum(x * x for x in b) ** 0.5 or 1.0
-        return dot / (na * nb)
-
-    probe = sorted(
-        range(len(cents)), key=lambda i: -cos(cents[i], query_vec)
-    )[:n_probe]
+    probe = _probe_cells(cents, query_vec, n_probe)
     assigned = io.read(spark, table, snapshot)
     return (
         assigned.filter(F.col("cell").isin(probe))

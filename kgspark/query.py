@@ -11,21 +11,24 @@ ordered take.
 
 from __future__ import annotations
 
-import re
+import hashlib
+import inspect
+import json
+import time
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructType
 
 from . import KEYWORD_WEIGHT, MAX_DEPTH, TOP_K, VECTOR_WEIGHT
 from .io import local_frame
-
-_TOKEN_RE = re.compile(r"[a-z0-9]+")
+from .textops import _TOKEN_RE, embed_text
 
 
 def query_terms(query: str) -> list[str]:
     """Tokenize a query string with the SAME [a-z0-9]+ rule the corpus /
-    inverted index uses — a punctuated query like "court, contract" must
-    yield the terms the index actually stores, not "court,"."""
+    inverted index uses (textops' S3 token rule) — a punctuated query
+    like "court, contract" must yield the terms the index actually
+    stores, not "court,"."""
     return sorted(set(_TOKEN_RE.findall(query.lower())))
 
 
@@ -94,9 +97,11 @@ def build_inverted_index(
 def keyword_scores_from_index(
     index: DataFrame, query: str, k: int = TOP_K, id_col: str = "chunk_id"
 ) -> DataFrame:
-    """Keyword top-k against the materialized inverted index: broadcast
-    the query's terms, sum tf per chunk. The scan touches only the
-    term-matched rows (predicate pushdown on `term`)."""
+    """Keyword top-k (reference O20, elasticsearch_store.py:138-178)
+    against the materialized inverted index: the query's terms as an
+    isin literal, tf summed per chunk. The scan touches only the
+    term-matched rows (predicate pushdown on `term`). For the
+    reference's `fuzziness: AUTO` use keyword_scores_fuzzy."""
     terms = query_terms(query)
     if not terms:
         return index.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
@@ -104,41 +109,6 @@ def keyword_scores_from_index(
         index.filter(F.col("term").isin(terms))
         .groupBy(id_col)
         .agg(F.sum("tf").alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def keyword_scores(
-    chunks: DataFrame,
-    query: str,
-    k: int = TOP_K,
-    id_col: str = "chunk_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Keyword top-k (reference O20, elasticsearch_store.py:138-178),
-    as summed term frequency of the query's tokens; for the reference's
-    `fuzziness: AUTO` behavior use keyword_scores_fuzzy (index path).
-    Inverted-index shape: explode(split(lower(text))) -> term filter ->
-    tf sum. The term list is tiny, so it is an isin literal rather than
-    a joined frame."""
-    terms = query_terms(query)
-    if not terms:
-        return chunks.select(
-            F.col(id_col), F.lit(0.0).alias("score")
-        ).limit(0)
-    tokens = chunks.select(
-        F.col(id_col),
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0
-            )
-        ).alias("term"),
-    )
-    return (
-        tokens.filter(F.col("term").isin(terms))
-        .groupBy(id_col)
-        .agg(F.count("*").cast("double").alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
     )
@@ -158,9 +128,10 @@ def keyword_scores_bm25(
     """BM25 relevance over the materialized inverted index — the
     engine's analog of the reference's ES `multi_match best_fields`
     relevance model (elasticsearch_store.py:145-153), which is
-    df/length-normalized, unlike the raw tf sum of keyword_scores
-    (kept as the default for reference score-parity; BM25 is opt-in
-    via graphrag_search(keyword_model="bm25")).
+    df/length-normalized, unlike the raw tf sum of
+    keyword_scores_from_index (kept as the default for reference
+    score-parity; BM25 is opt-in via
+    graphrag_search(keyword_model="bm25")).
 
         idf(t)   = ln(1 + (N - df + 0.5) / (df + 0.5))     (Lucene/ES)
         score(d) = sum_t idf(t) * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
@@ -478,6 +449,25 @@ def _props_str(pcol):
     )
 
 
+def _with_node_meta(out: DataFrame, kg_nodes: DataFrame | None) -> DataFrame:
+    """(name, rel_types, hops) entity rows; with `kg_nodes` given, also
+    the node's labels (', '-joined) and properties (_props_str) between
+    name and rel_types, '' for a name with no node row."""
+    if kg_nodes is None:
+        return out.select("name", "rel_types", "hops")
+    meta = kg_nodes.select(
+        F.col("canonical_id").alias("name"),
+        F.array_join("labels", ", ").alias("labels"),
+        _props_str(F.col("properties")).alias("properties"),
+    )
+    return out.join(meta, "name", "left").select(
+        "name",
+        F.coalesce("labels", F.lit("")).alias("labels"),
+        F.coalesce("properties", F.lit("")).alias("properties"),
+        "rel_types", "hops",
+    )
+
+
 def entities_from_chunks(
     mentions: DataFrame,
     chunk_ids: list[str],
@@ -528,21 +518,7 @@ def entities_from_chunks(
             F.array_repeat(F.lit("CONTAINS_ENTITY"), F.col("hops")), ","
         ),
     )
-    if kg_nodes is not None:
-        meta = kg_nodes.select(
-            F.col("canonical_id").alias("name"),
-            F.array_join("labels", ", ").alias("labels"),
-            _props_str(F.col("properties")).alias("properties"),
-        )
-        out = out.join(meta, "name", "left").select(
-            "name",
-            F.coalesce("labels", F.lit("")).alias("labels"),
-            F.coalesce("properties", F.lit("")).alias("properties"),
-            "rel_types", "hops",
-        )
-    else:
-        out = out.select("name", "rel_types", "hops")
-    return out.orderBy("name").limit(limit)
+    return _with_node_meta(out, kg_nodes).orderBy("name").limit(limit)
 
 
 #: rows above which a hop frontier is no longer hinted for broadcast —
@@ -645,19 +621,7 @@ def related_entities(
         F.array_join("path", ",").alias("rel_types"),
         F.size("path").alias("hops"),
     )
-    if kg_nodes is not None:
-        meta = kg_nodes.select(
-            F.col("canonical_id").alias("name"),
-            F.array_join("labels", ", ").alias("labels"),
-            _props_str(F.col("properties")).alias("properties"),
-        )
-        out = out.join(meta, "name", "left").select(
-            "name",
-            F.coalesce("labels", F.lit("")).alias("labels"),
-            F.coalesce("properties", F.lit("")).alias("properties"),
-            "rel_types", "hops",
-        )
-    return out.orderBy("name").limit(limit)
+    return _with_node_meta(out, kg_nodes).orderBy("name").limit(limit)
 
 
 def graphrag_search(
@@ -682,8 +646,10 @@ def graphrag_search(
 
       1. embed the query with the same deterministic featurizer the
          chunks were embedded with (embeddings.py:28-45 analog)
-      2. vector top-2k cosine + keyword top-2k term-frequency
-         (qdrant_store.py:80-105 / elasticsearch_store.py:138-178)
+      2. vector top-2k cosine + keyword top-2k over the inverted
+         index (tf, fuzzy or bm25; qdrant_store.py:80-105 /
+         elasticsearch_store.py:138-178); without `inverted_index`
+         the index is built from `chunks` in the same plan
       3. weighted fusion to top-k (graphrag.py:117-162)
       4. entity expansion from the hit chunks (neo4j_store.py:261-345)
 
@@ -693,33 +659,34 @@ def graphrag_search(
     runs no Spark job. The answer-generation step (graphrag.py:196-222)
     is out of scope per SURVEY.md O25 (non-deterministic external LLM).
     """
-    from .textops import embed_text  # noqa: PLC0415
-
     qvec = embed_text(query_text, embed_dim)
     vec_hits = vector_topk(embeddings, qvec, k=top_k * 2)
+    # the keyword side always reads an inverted index: the one ingest
+    # built (O18), or, for an ad-hoc call, the same index over `chunks`
+    index = (
+        inverted_index if inverted_index is not None
+        else build_inverted_index(chunks)
+    )
     if not hybrid:
         # reference use_hybrid_search=False: vector + graph only
         # (cli/main.py:130,184) — fuse against an empty keyword side so
         # scores stay on the same normalized scale
         kw_hits = vec_hits.limit(0)
-    elif inverted_index is not None and keyword_model == "bm25":
+    elif keyword_model == "bm25":
         # opt-in (default "tf" preserves reference score parity):
         # df/length-normalized relevance like ES best_fields.
         # bm25_stats = (dl table, n_docs, avgdl) from read_bm25_stats —
         # when given, the query touches only its own term rows
         dl_df, nd, ad = bm25_stats if bm25_stats else (None, None, None)
         kw_hits = keyword_scores_bm25(
-            inverted_index, query_text, k=top_k * 2,
-            dl=dl_df, n_docs=nd, avgdl=ad,
+            index, query_text, k=top_k * 2, dl=dl_df, n_docs=nd, avgdl=ad,
         )
-    elif inverted_index is not None and fuzziness > 0:
+    elif fuzziness > 0:
         kw_hits = keyword_scores_fuzzy(
-            inverted_index, query_text, k=top_k * 2, max_edit=fuzziness
+            index, query_text, k=top_k * 2, max_edit=fuzziness
         )
-    elif inverted_index is not None:
-        kw_hits = keyword_scores_from_index(inverted_index, query_text, k=top_k * 2)
     else:
-        kw_hits = keyword_scores(chunks, query_text, k=top_k * 2)
+        kw_hits = keyword_scores_from_index(index, query_text, k=top_k * 2)
     hits = fuse(
         vec_hits, kw_hits, k=top_k,
         vector_weight=vector_weight, keyword_weight=keyword_weight,
@@ -738,74 +705,62 @@ def graphrag_search(
 
 #: the graphrag_search results a query-cache record holds
 _CACHED = ("hits", "entities")
+#: taken once at import: a profiler may swap the module-level
+#: graphrag_search for a bare (*a, **k) wrapper at run time
+_SEARCH_SIG = inspect.signature(graphrag_search)
+#: the corpus frames, named in the key by corpus_id
+_CORPUS_FRAMES = ("chunks", "embeddings", "mentions")
+#: the optional frames, keyed by whether they were given
+_OPTIONAL_FRAMES = ("inverted_index", "kg_nodes", "bm25_stats")
 
 
 def graphrag_search_cached(
     io,
-    chunks: DataFrame,
-    embeddings: DataFrame,
-    mentions: DataFrame,
-    query_text: str,
-    top_k: int = TOP_K,
-    max_depth: int = MAX_DEPTH,
-    embed_dim: int = 64,
-    inverted_index: DataFrame | None = None,
-    fuzziness: int = 0,
-    keyword_model: str = "tf",
-    kg_nodes: DataFrame | None = None,
+    *args,
     ttl_seconds: float = 3600.0,
     corpus_id: str | None = None,
-    hybrid: bool = True,
-    vector_weight: float = VECTOR_WEIGHT,
-    keyword_weight: float = KEYWORD_WEIGHT,
-    bm25_stats: tuple[DataFrame, float, float] | None = None,
+    **kwargs,
 ) -> dict:
-    """Query-result cache over graphrag_search — the reference caches
-    search results for 1 h keyed on sha256(query+params)
-    (graphrag.py:44-64,93-96). Here the cache is one JSON record per
-    digest under <warehouse>/_qcache/ (TableIO.cache_get/cache_put),
-    holding both results' rows and schemas and the write time: a
-    repeated identical query within the TTL is one file read and two
-    local frames — zero recompute of the retrieval DAG, at a cost that
-    does not grow with the number of cached queries. An expired record
-    is overwritten in place. Returns {"hits", "entities", "cached": bool}.
+    """Query-result cache over graphrag_search, called with its own
+    arguments — the reference caches search results for 1 h keyed on
+    sha256(query+params) (graphrag.py:44-64,93-96). Here the cache is
+    one JSON record per digest under <warehouse>/_qcache/
+    (TableIO.cache_get/cache_put), holding both results' rows and
+    schemas and the write time: a repeated identical query within the
+    TTL is one file read and two local frames — zero recompute of the
+    retrieval DAG, at a cost that does not grow with the number of
+    cached queries. An expired record is overwritten in place. Returns
+    {"hits", "entities", "cached": bool}.
 
-    Unlike the reference's in-memory per-store cache, this cache is
-    persisted in a warehouse and survives processes — so the key must
-    also carry the CORPUS identity, or a rebuilt/different corpus
-    sharing the warehouse would be served stale hits for up to the TTL.
-    Pass `corpus_id` (e.g. the chunks-table snapshot id); it defaults to
-    the warehouse's current `chunks` snapshot when one exists."""
-    import hashlib  # noqa: PLC0415
-    import json  # noqa: PLC0415
-    import time  # noqa: PLC0415
-
+    The key covers every argument of the call with defaults applied:
+    each scalar by value, each optional frame (`inverted_index`,
+    `kg_nodes`, `bm25_stats`) by whether it was given, and the corpus
+    frames through `corpus_id`. Unlike the reference's in-memory
+    per-store cache, this cache is persisted in a warehouse and
+    survives processes, so the key must carry the CORPUS identity, or
+    a rebuilt/different corpus sharing the warehouse would be served
+    stale hits for up to the TTL. Pass `corpus_id` (e.g. the chunks-
+    table snapshot id); it defaults to the warehouse's current
+    `chunks` snapshot when one exists."""
+    params = _SEARCH_SIG.bind(*args, **kwargs)
+    params.apply_defaults()
     if corpus_id is None:
         try:
             corpus_id = io.current_snapshot("chunks")
         except OSError:
             corpus_id = None
+    fields = {"corpus": corpus_id} | {
+        name: value is not None if name in _OPTIONAL_FRAMES else value
+        for name, value in params.arguments.items()
+        if name not in _CORPUS_FRAMES
+    }
     key = hashlib.sha256(
-        json.dumps(
-            {
-                "q": query_text,
-                "top_k": top_k,
-                "max_depth": max_depth,
-                "embed_dim": embed_dim,
-                "fuzziness": fuzziness,
-                "keyword_model": keyword_model,
-                "corpus": corpus_id,
-                "hybrid": hybrid,
-                "vw": vector_weight,
-                "kw": keyword_weight,
-            },
-            sort_keys=True,
-        ).encode()
+        json.dumps(fields, sort_keys=True).encode()
     ).hexdigest()
     now = time.time()
     record = io.cache_get(key)
     if record is not None and now - record["ts"] <= ttl_seconds:
-        spark = chunks.sparkSession
+        spark = params.arguments["chunks"].sparkSession
         return {
             name: local_frame(
                 spark, record[name]["rows"],
@@ -813,14 +768,7 @@ def graphrag_search_cached(
             )
             for name in _CACHED
         } | {"cached": True}
-    out = graphrag_search(
-        chunks, embeddings, mentions, query_text,
-        top_k=top_k, max_depth=max_depth, embed_dim=embed_dim,
-        inverted_index=inverted_index, fuzziness=fuzziness,
-        keyword_model=keyword_model, kg_nodes=kg_nodes,
-        hybrid=hybrid, vector_weight=vector_weight,
-        keyword_weight=keyword_weight, bm25_stats=bm25_stats,
-    )
+    out = graphrag_search(*args, **kwargs)
     # both frames are local: collecting them again runs no Spark job
     io.cache_put(key, {"ts": now} | {
         name: {"schema": out[name].schema.jsonValue(),

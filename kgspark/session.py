@@ -49,40 +49,13 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE initial shuffle granularity. Two measured regimes
-        # (BENCH/profile_cluster.md): on MEMORY-BOUNDED executors
-        # (4-6 GB), partitions == cores makes a wide agg hold 1/cores
-        # of the data per task and spill (the inverted-index agg
-        # spilled 1.3 GB of a 1.4 GB shuffle at 8 partitions) — there,
-        # 4x-cores initial partitions eliminated the spill entirely.
-        # On the single-JVM 128 GB local bench nothing ever spills and
-        # fine initial partitions instead tax the many-small-job
-        # iterative segments 2-5x (A/B: kg_analytics 12.1s vs 26.8s).
-        # Default = cores (the no-spill regime); the scaling protocols
-        # and any bounded-memory deployment export
-        # KGSPARK_AQE_INITIAL_FACTOR=4 KGSPARK_AQE_INITIAL_MIN=64.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(max(
-                shuffle_partitions
-                * int(os.environ.get("KGSPARK_AQE_INITIAL_FACTOR", "1")),
-                int(os.environ.get("KGSPARK_AQE_INITIAL_MIN", "1")),
-                shuffle_partitions,
-            )),
-        )
+        # AQE's initial shuffle partition count and the shuffle codec
+        # stay at Spark's defaults (the shuffle partition count; lz4),
+        # the no-spill, CPU-bound single-node regime. Memory- or
+        # disk-bounded deployments raise them with spark-submit --conf,
+        # as tools/bench_scaling.py --mode cluster does
+        # (BENCH/profile_cluster.md, BENCH/scaling_cluster.md).
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Shuffle/broadcast compression codec. Default stays Spark's
-        # lz4 (fastest; right for CPU-bound single-node runs). On
-        # deployments where shuffle WRITE BANDWIDTH is the bottleneck —
-        # the r4 cluster profile pinned ~2.4 GB of index shuffle
-        # landing on ONE shared /tmp disk (BENCH/scaling_cluster.md) —
-        # zstd roughly halves the bytes hitting disk for this engine's
-        # text-heavy shuffles at a small CPU premium: export
-        # KGSPARK_IO_CODEC=zstd (the cluster scaling protocol does).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("KGSPARK_IO_CODEC", "lz4"),
-        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -23,8 +23,9 @@ def test_keyword_scores_tf(spark):
         [("c0", "court court contract"), ("c1", "nothing here"), ("c2", "court")],
         "chunk_id string, text string",
     )
+    idx = query.build_inverted_index(chunks)
     got = {r["chunk_id"]: r["score"] for r in
-           query.keyword_scores(chunks, "Court contract", k=5).collect()}
+           query.keyword_scores_from_index(idx, "Court contract", k=5).collect()}
     assert got == {"c0": 3.0, "c2": 1.0}
 
 
@@ -35,13 +36,10 @@ def test_keyword_query_tokenized_like_corpus(spark):
         [("c0", "court court contract"), ("c1", "nothing here")],
         "chunk_id string, text string",
     )
-    got = {r["chunk_id"]: r["score"] for r in
-           query.keyword_scores(chunks, "Court, contract!", k=5).collect()}
-    assert got == {"c0": 3.0}
     idx = query.build_inverted_index(chunks)
-    got_idx = {r["chunk_id"]: r["score"] for r in
-               query.keyword_scores_from_index(idx, "Court, contract!", k=5).collect()}
-    assert got_idx == {"c0": 3.0}
+    got = {r["chunk_id"]: r["score"] for r in
+           query.keyword_scores_from_index(idx, "Court, contract!", k=5).collect()}
+    assert got == {"c0": 3.0}
     assert query.query_terms("Court, contract!") == ["contract", "court"]
 
 
@@ -323,6 +321,68 @@ def test_graphrag_query_cache_skips_recompute(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(query, "vector_topk", boom)
     with pytest.raises(AssertionError, match="recomputed"):
         query.graphrag_search_cached(io, *args, **kw)
+
+
+def test_graphrag_query_cache_key_covers_every_argument(spark, tmp_path):
+    """The cache key is the search call bound with defaults applied: a
+    call without kg_nodes after one with it is a miss and returns the
+    3-column entity rows, not the 5-column rows the first call stored;
+    the same call spelled positionally or with an explicit default is
+    a hit."""
+    from kgspark.fixtures import pages_df
+    from kgspark.io import TableIO
+    from kgspark.pipeline import build_kg_frames
+
+    frames = build_kg_frames(spark, pages_df(spark, 40), link_mode="exact")
+    io = TableIO(str(tmp_path / "wh"))
+    args = (frames["chunks"], frames["embeddings"], frames["mentions"],
+            "court contract agreement")
+    kw = {"top_k": 3, "corpus_id": "c"}
+
+    full = query.graphrag_search_cached(
+        io, *args, kg_nodes=frames["kg_nodes"], **kw
+    )
+    assert full["cached"] is False
+    assert full["entities"].columns == [
+        "name", "labels", "properties", "rel_types", "hops"
+    ]
+    bare = query.graphrag_search_cached(io, *args, **kw)
+    assert bare["cached"] is False
+    assert bare["entities"].columns == ["name", "rel_types", "hops"]
+    assert bare["hits"].collect() == full["hits"].collect()
+
+    again = query.graphrag_search_cached(
+        io, *args, 3, max_depth=2, kg_nodes=None, corpus_id="c"
+    )
+    assert again["cached"] is True
+    assert again["entities"].columns == ["name", "rel_types", "hops"]
+
+
+def test_graphrag_search_without_index_matches_indexed(spark):
+    """One keyword path: without `inverted_index` the search builds the
+    index from `chunks`, so bm25 and fuzzy scoring apply with or
+    without a prebuilt index and the results equal the indexed call's
+    by repr. The typo'd query term makes the three models differ."""
+    from kgspark.fixtures import pages_df
+    from kgspark.pipeline import build_kg_frames
+
+    frames = build_kg_frames(spark, pages_df(spark, 40), link_mode="exact")
+    args = (frames["chunks"], frames["embeddings"], frames["mentions"],
+            "court contrct agreement the fox")
+    index = query.build_inverted_index(frames["chunks"])
+
+    def rows(**kw):
+        out = query.graphrag_search(*args, top_k=5, **kw)
+        return {k: [repr(r) for r in out[k].collect()]
+                for k in ("hits", "entities")}
+
+    got = {}
+    for name, kw in (("tf", {}), ("bm25", {"keyword_model": "bm25"}),
+                     ("fuzzy", {"fuzziness": 1})):
+        got[name] = rows(**kw)
+        assert got[name] == rows(inverted_index=index, **kw), name
+    assert got["bm25"]["hits"] != got["tf"]["hits"]
+    assert got["fuzzy"]["hits"] != got["tf"]["hits"]
 
 
 def test_graphrag_search_one_pass_plan_shape(spark, tmp_path, monkeypatch):

@@ -213,24 +213,6 @@ def test_source_stats_stateful_across_batches(spark, tmp_path):
     assert max(counts.values()) >= 2
 
 
-def test_keyword_index_matches_direct(spark):
-    """Materialized inverted index must give identical keyword top-k to
-    direct tokenization."""
-    from kgspark import stages
-    from kgspark.query import (
-        build_inverted_index,
-        keyword_scores,
-        keyword_scores_from_index,
-    )
-
-    chunks = stages.chunk(stages.extract_text(pages_df(spark, 40)))
-    idx = build_inverted_index(chunks)
-    q = "court contract agreement the fox"
-    a = sorted(map(tuple, keyword_scores(chunks, q, k=10).collect()))
-    b = sorted(map(tuple, keyword_scores_from_index(idx, q, k=10).collect()))
-    assert a == b
-
-
 def test_stream_to_warehouse_exactly_once(spark, landing, tmp_path):
     """foreachBatch + idempotent batch-keyed commits: streamed pages
     land as append-mode snapshots, replays do not double-commit, and

@@ -49,8 +49,10 @@ def make_zip(out: Path) -> Path:
     return out
 
 
-def run_once(sf_dir: str, cpus: int, zip_path: Path, n_pages: int,
-             sent_scale: int, mode: str = "pinned") -> dict:
+def build_command(sf_dir: str, cpus: int, zip_path: Path, n_pages: int,
+                  sent_scale: int, mode: str = "pinned"
+                  ) -> tuple[list[str], dict[str, str]]:
+    """The spark-submit command line and environment of one run."""
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
     env["KGSPARK_BENCH_PAGES"] = str(n_pages)
@@ -59,24 +61,6 @@ def run_once(sf_dir: str, cpus: int, zip_path: Path, n_pages: int,
     env["KGSPARK_BENCH_SKIP_EXTRAS"] = "1"
     env["KGSPARK_BENCH_TASK_CPUS"] = "1"
     if mode == "cluster":
-        # memory-bounded executors (4-6 GB): fine initial shuffle
-        # partitions stop the index-agg spill (zero post-fix,
-        # BENCH/profile_cluster.md); set at BOTH levels so the
-        # comparison is conf-identical. The single-JVM pinned mode
-        # (16 GB driver) never spills — it keeps the engine default,
-        # which also keeps it comparable with the r1-r3 readings.
-        env.setdefault("KGSPARK_AQE_INITIAL_FACTOR", "4")
-        env.setdefault("KGSPARK_AQE_INITIAL_MIN", "64")
-        # shuffle bytes, not CPU, bound this deployment's index build:
-        # every executor's shuffle write lands on ONE shared /tmp disk
-        # (BENCH/profile_cluster.md). zstd cuts the index shuffle from
-        # 2,389 MB to 922 MB (-61%, event-logged) and moved measured
-        # pipeline+index N->4N efficiency 0.78 -> 0.90 (r5 codec A/B,
-        # BENCH/scaling_cluster.md); at the disk-unbound 1-executor
-        # level the codecs are within noise, so zstd is strictly the
-        # right default for the disk-shared regime. Single-JVM pinned
-        # mode keeps lz4 (CPU-bound; zstd's compression CPU is pure cost).
-        env.setdefault("KGSPARK_IO_CODEC", "zstd")
         # REAL executor JVMs: local-cluster[n,2,mem] spawns n separate
         # executor processes with 2 cores each — each executor owns its
         # cores (Python workers included), so slot cost is equal at
@@ -84,7 +68,30 @@ def run_once(sf_dir: str, cpus: int, zip_path: Path, n_pages: int,
         master = f"local-cluster[{cpus},2,6144]"
         env["SPARK_GRAFT_CPUS"] = str(cpus * 2)  # shuffle partitions
         env["KGSPARK_BENCH_MASTER"] = master
-        extra = ["--conf", "spark.executor.memory=4g"]
+        extra = [
+            "--conf", "spark.executor.memory=4g",
+            # memory-bounded executors (4-6 GB): initial shuffle
+            # partitions at 4x the shuffle partitions, at least 64,
+            # stop the index-agg spill (zero post-fix,
+            # BENCH/profile_cluster.md); set at BOTH levels so the
+            # comparison is conf-identical. The single-JVM pinned mode
+            # (16 GB driver) never spills — it keeps Spark's default,
+            # which also keeps it comparable with the r1-r3 readings.
+            "--conf",
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum="
+            f"{max(8 * cpus, 64)}",
+            # shuffle bytes, not CPU, bound this deployment's index
+            # build: every executor's shuffle write lands on ONE shared
+            # /tmp disk (BENCH/profile_cluster.md). zstd cuts the index
+            # shuffle from 2,389 MB to 922 MB (-61%, event-logged) and
+            # moved measured pipeline+index N->4N efficiency 0.78 ->
+            # 0.90 (r5 codec A/B, BENCH/scaling_cluster.md); at the
+            # disk-unbound 1-executor level the codecs are within
+            # noise, so zstd is strictly the right default for the
+            # disk-shared regime. Single-JVM pinned mode keeps lz4
+            # (CPU-bound; zstd's compression CPU is pure cost).
+            "--conf", "spark.io.compression.codec=zstd",
+        ]
     else:
         master = f"local[{cpus}]"
         env["SPARK_GRAFT_CPUS"] = str(cpus)
@@ -105,6 +112,12 @@ def run_once(sf_dir: str, cpus: int, zip_path: Path, n_pages: int,
     ]
     if mode == "pinned":
         cmd = ["taskset", "-c", f"0-{cpus - 1}", *cmd]
+    return cmd, env
+
+
+def run_once(sf_dir: str, cpus: int, zip_path: Path, n_pages: int,
+             sent_scale: int, mode: str = "pinned") -> dict:
+    cmd, env = build_command(sf_dir, cpus, zip_path, n_pages, sent_scale, mode)
     proc = subprocess.run(
         cmd, env=env, capture_output=True, text=True, timeout=7200
     )
