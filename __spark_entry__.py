@@ -614,26 +614,6 @@ def _q_ann_ivf_topk(spark, sf_dir):
     )
 
 
-def _q_ann_ivf_vectorized(spark, sf_dir):
-    """IVF ANN with the vectorized (Arrow-batch BLAS matmul) cell
-    assignment FORCED — the production path that auto-engages above
-    LITERAL_MATH_MAX_TERMS (dim x nlist > 8192, e.g. dim 3072 x nlist
-    1024), exercised here through the driver contract at small dim so
-    it shares ann_ivf_topk's DuckDB oracle byte-for-byte: both
-    assignment kernels must place every vector in the same cell."""
-    from kgspark.dataops import ivf_ann
-
-    emb = _read(spark, sf_dir, "embeddings")
-    cents = [
-        [float(x) for x in r["embedding"]]
-        for r in emb.orderBy("vec_id").limit(8).collect()
-    ]
-    q = _query_vec(spark, sf_dir)
-    return ivf_ann(emb, cents, q, k=10, n_probe=3, vectorized=True).select(
-        "vec_id", F.round("score", 6).alias("score")
-    )
-
-
 def _q_ann_ivf_indexed(spark, sf_dir):
     """Materialized-IVF probe path: build (or resume) the partitioned
     assignment index via TableIO, then query it — the cell filter is a
@@ -1657,20 +1637,15 @@ def _q_kmeans_clusters(spark, sf_dir):
     feeds ivf_build at scale (reference ANN backend: qdrant_store.py;
     centroid choice is the part Qdrant hides)."""
     from kgspark.dataops import ivf_assign, kmeans_train
-    from kgspark.query import cosine_score
 
     emb = _read(spark, sf_dir, "embeddings")
-    cents = kmeans_train(emb, k=4, n_iter=2, vectorized=False)
-    assigned = ivf_assign(emb, cents, vectorized=False)
-    scores = F.array(*[cosine_score(F.col("embedding"), c) for c in cents])
+    cents = kmeans_train(emb, k=4, n_iter=2)
     return (
-        assigned.select(
-            "cell", F.element_at(scores, F.col("cell") + 1).alias("own_cos")
-        )
+        ivf_assign(emb, cents, with_score=True)
         .groupBy("cell")
         .agg(
             F.count("*").alias("n_members"),
-            F.round(F.avg("own_cos"), 6).alias("avg_cos"),
+            F.round(F.avg("best_cos"), 6).alias("avg_cos"),
         )
     )
 
@@ -2243,10 +2218,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r5-fixed scale paths (oracle-backed)
         "zipf_slope": _q_zipf_slope,
         "semantic_dedup_pairs": _q_semantic_dedup,
-        # ivf_assign gained with_score: every consumer re-verified
+        # one Arrow-matmul vector-math path: every ivf_assign / LSH
+        # consumer re-verified (ann_ivf_vectorized_topk runs the
+        # ann_ivf_topk plan, so it needs no window slot)
         "ann_ivf_topk": _q_ann_ivf_topk,
         "ann_ivf_indexed_topk": _q_ann_ivf_indexed,
-        "ann_ivf_vectorized_topk": _q_ann_ivf_vectorized,
+        "embedding_near_dup_lsh": _q_embedding_near_dup_lsh,
         "kmeans_clusters": _q_kmeans_clusters,
         # kgspark/bpe.py touched (encode path added)
         "bpe_merges": _q_bpe_merges,
@@ -2325,7 +2302,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "near_dup_clusters": _q_near_dup_clusters,
         "simhash_near_dup": _q_simhash_near_dup,
         "embedding_near_dup": _q_embedding_near_dup,
-        "embedding_near_dup_lsh": _q_embedding_near_dup_lsh,
+        # same plan as ann_ivf_topk; the key keeps the 118-query set
+        "ann_ivf_vectorized_topk": _q_ann_ivf_topk,
         "tfidf_top_terms": _q_tfidf_top_terms,
         "dataset_split": _q_dataset_split,
         "part_triangles": _q_part_triangles,
@@ -4142,8 +4120,7 @@ def oracle_sql() -> dict[str, str]:
                max(deg)::BIGINT AS max_deg
         FROM deg GROUP BY 1
     """
-    # forced-vectorized assignment must place every vector in the same
-    # cell as the literal-codegen path -> identical oracle
+    # ann_ivf_vectorized_topk runs the ann_ivf_topk plan -> same oracle
     oracles["ann_ivf_vectorized_topk"] = oracles["ann_ivf_topk"]
     oracles["simhash_near_dup"] = _simhash_sql(max_hamming=3)
     oracles["kmeans_clusters"] = _kmeans_cluster_sql(k=4, dim=64)

@@ -25,7 +25,7 @@ on these boundaries staying fixed):
 Other segments: exact/minhash/simhash dedup (simhash in both the
 oracle md5 and production xxhash64 modes + heavy-doc signature-kernel
 pair), ANN (brute force, inline IVF, materialized-IVF build/probe,
-production-dim vectorized assignment), embedding-LSH at production
+production-dim Arrow-matmul assignment), embedding-LSH at production
 dims, fuzzy vocab build/query split, text analysis, relational.
 r3-new segments (all skipped under KGSPARK_BENCH_SKIP_EXTRAS so
 scaling runs time the r2-comparable list): corpus_filters
@@ -321,9 +321,9 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
 
     if not skip_extras:
         # --- production-dim vector math (dim 1024 / nlist 256) -------------
-        # the regime where literal codegen cannot compile: exercises the
-        # broadcast-numpy pandas-UDF path (ivf_assign / LSH signature) on
-        # a deterministic synthetic corpus generated IN the executors
+        # the broadcast-numpy pandas-UDF kernels (ivf_assign / LSH
+        # signature) at the reference's scale of dims, on a deterministic
+        # synthetic corpus generated IN the executors
         import numpy as np
         import pandas as pd
 
@@ -354,7 +354,7 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
         ]
         timed(
             "ann_ivf_highdim_assign",
-            lambda: ivf_assign(emb_hd, cents_hd).count(),  # auto -> vectorized
+            lambda: ivf_assign(emb_hd, cents_hd).count(),
         )
         timed(
             "embedding_lsh_highdim",

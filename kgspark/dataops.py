@@ -421,18 +421,6 @@ def brute_force_ann(
     )
 
 
-# Above this many plane/centroid literals (n_vectors * dim), the
-# literal-codegen vector math is replaced by a broadcast-numpy pandas
-# UDF: one Catalyst expression per centroid over literal arrays means
-# nlist*dim literals in ONE expression tree — at production scale (the
-# reference embeds at dim 3072, embeddings.py:20; nlist >= 1024) that
-# blows the JVM's 64 KB codegen method limit (interpreted fallback) or
-# OOMs the driver building the plan. The literal path stays the default
-# below the threshold because it is fully JVM-side AND expressible as
-# DuckDB oracle SQL (the correctness anchor).
-LITERAL_MATH_MAX_TERMS = 8192
-
-
 def _unit_rows(mat):
     """Row-normalize a (n, d) float matrix; zero-norm rows divide by 1
     (same guard as cosine_score / pair_cosine: zero vectors score 0)."""
@@ -443,96 +431,47 @@ def _unit_rows(mat):
     return mat / norms[:, None]
 
 
-def _ivf_assign_vectorized(
-    embeddings: DataFrame, centroids: list[list[float]], with_score: bool = False
-) -> DataFrame:
-    """Argmax-cosine cell assignment as ONE BLAS matmul per Arrow batch
-    over a broadcast centroid matrix — the production-dim path. Same
-    semantics as the literal path: full cosine (both sides normalized,
-    zero-norm guarded to 0) with first-max-wins tie-break (np.argmax).
-    `with_score` also emits the winning cosine (`best_cos`) — the row
-    max the matmul already computes; discarding and re-deriving it
-    downstream was the r4 kmeans_inertia literal-codegen blowup."""
-    import numpy as np  # noqa: PLC0415
-
-    cmat = _unit_rows(np.asarray(centroids, dtype=np.float64))
-    bc = embeddings.sparkSession.sparkContext.broadcast(cmat)
-
-    if with_score:
-        @F.pandas_udf("cell int, best_cos double")
-        def assign_score_udf(embs: pd.Series) -> pd.DataFrame:
-            c = bc.value
-            if len(embs) == 0:
-                return pd.DataFrame({"cell": pd.Series([], dtype="int32"),
-                                     "best_cos": pd.Series([], dtype="float64")})
-            e = np.stack([np.asarray(v, dtype=np.float64) for v in embs])
-            sims = _unit_rows(e) @ c.T
-            cells = np.argmax(sims, axis=1)
-            return pd.DataFrame({
-                "cell": pd.Series(cells, dtype="int32"),
-                "best_cos": pd.Series(sims[np.arange(len(cells)), cells],
-                                      dtype="float64"),
-            })
-
-        st = assign_score_udf(F.col("embedding"))
-        return embeddings.select(
-            "vec_id", "embedding",
-            st.getField("cell").alias("cell"),
-            st.getField("best_cos").alias("best_cos"),
-        )
-
-    @F.pandas_udf("int")
-    def assign_udf(embs: pd.Series) -> pd.Series:
-        c = bc.value
-        if len(embs) == 0:
-            return pd.Series([], dtype="int32")
-        e = np.stack([np.asarray(v, dtype=np.float64) for v in embs])
-        cells = np.argmax(_unit_rows(e) @ c.T, axis=1)
-        return pd.Series(cells, dtype="int32")
-
-    return embeddings.select(
-        "vec_id", "embedding", assign_udf(F.col("embedding")).alias("cell")
-    )
-
-
 def ivf_assign(
     embeddings: DataFrame,
     centroids: list[list[float]],
-    vectorized: bool | None = None,
     with_score: bool = False,
 ) -> DataFrame:
     """IVF cell assignment: argmax cosine per vector — the scale path
     for ANN (search only the probed cells instead of the full table).
 
-    Two physical strategies, same semantics:
-      * literal codegen (default below LITERAL_MATH_MAX_TERMS literals):
-        one JVM cosine expression per centroid — whole-stage codegen,
-        no Python, DuckDB-oracle-expressible;
-      * broadcast-numpy pandas UDF (default above the threshold): one
-        matmul per Arrow batch — the only plan that survives production
-        dims (dim 3072 x nlist 1024 = 3M literals cannot codegen).
-    `vectorized` forces a path explicitly (tests assert both agree).
-    `with_score` adds a `best_cos` column (the assigned centroid's
-    cosine) on BOTH paths — consumers needing the distance (e.g.
+    One BLAS matmul per Arrow batch against a broadcast, row-normalized
+    centroid matrix: full cosine (zero-norm vectors score 0) with
+    first-max-wins tie-break (np.argmax), so equal centroids resolve
+    to the lower cell id. No centroid enters the plan as a literal, so
+    the plan size does not grow with nlist x dim (dim 3072 x nlist 1024
+    is 3M values). `with_score` adds a `best_cos` column — the row max
+    the matmul already computed; consumers needing the distance (e.g.
     kmeans_inertia) must read it here instead of re-scoring against a
-    centroid-literal array, which would reintroduce the codegen blowup
-    the vectorized path exists to avoid."""
-    if vectorized is None:
-        dim = len(centroids[0]) if centroids else 0
-        vectorized = len(centroids) * dim > LITERAL_MATH_MAX_TERMS
-    if vectorized:
-        return _ivf_assign_vectorized(embeddings, centroids, with_score=with_score)
-    from .query import cosine_score  # noqa: PLC0415
+    centroid-literal array."""
+    import numpy as np  # noqa: PLC0415
 
-    scores = F.array(
-        *[cosine_score(F.col("embedding"), c) for c in centroids]
-    )
-    cols = [
-        F.col("vec_id"), F.col("embedding"),
-        (F.array_position(scores, F.array_max(scores)) - 1).cast("int").alias("cell"),
-    ]
+    if not centroids:
+        raise ValueError("ivf_assign: centroids is an empty list")
+    cmat = _unit_rows(np.asarray(centroids, dtype=np.float64))
+    bc = embeddings.sparkSession.sparkContext.broadcast(cmat)
+
+    @F.pandas_udf("cell int, best_cos double")
+    def assign_udf(embs: pd.Series) -> pd.DataFrame:
+        c = bc.value
+        if len(embs) == 0:
+            return pd.DataFrame({"cell": pd.Series([], dtype="int32"),
+                                 "best_cos": pd.Series([], dtype="float64")})
+        e = np.stack([np.asarray(v, dtype=np.float64) for v in embs])
+        sims = _unit_rows(e) @ c.T
+        return pd.DataFrame({
+            "cell": pd.Series(np.argmax(sims, axis=1), dtype="int32"),
+            "best_cos": pd.Series(sims.max(axis=1), dtype="float64"),
+        })
+
+    st = assign_udf(F.col("embedding"))
+    cols = [F.col("vec_id"), F.col("embedding"), st.getField("cell").alias("cell")]
     if with_score:
-        cols.append(F.array_max(scores).alias("best_cos"))
+        cols.append(st.getField("best_cos").alias("best_cos"))
     return embeddings.select(*cols)
 
 
@@ -559,14 +498,13 @@ def ivf_ann(
     query_vec: list[float],
     k: int = 10,
     n_probe: int = 2,
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """IVF-bucketed ANN: score centroids against the query on the
     driver (tiny), then exact cosine only inside the n_probe nearest
     cells. Partition-prunable when the assignment table is written
     partitioned by cell."""
     probe = _probe_cells(centroids, query_vec, n_probe)
-    assigned = ivf_assign(embeddings, centroids, vectorized=vectorized)
+    assigned = ivf_assign(embeddings, centroids)
     from .query import cosine_score  # noqa: PLC0415
 
     return (
@@ -585,7 +523,6 @@ def ivf_build(
     centroids: list[list[float]],
     table: str = "ivf_index",
     input_key: str | None = None,
-    vectorized: bool | None = None,
 ) -> str:
     """Materialize the IVF assignment as a build artifact: the cell
     column becomes the parquet PARTITION key, so a probe query's
@@ -602,7 +539,7 @@ def ivf_build(
         existing = io.find_snapshot(table, input_key)
         if existing is not None:
             return existing
-    assigned = ivf_assign(embeddings, centroids, vectorized=vectorized)
+    assigned = ivf_assign(embeddings, centroids)
     return io.commit(
         table,
         assigned,
@@ -694,17 +631,16 @@ def _random_planes(n_planes: int, dim: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _lsh_band_keys_vectorized(
+def _lsh_band_keys(
     embeddings: DataFrame,
     planes: list[list[float]],
     bands: int,
     id_col: str,
 ) -> DataFrame:
-    """(doc, embedding, band, key) rows via one sign-bit matmul per
-    Arrow batch over a broadcast plane matrix — the production-dim path
-    for random-hyperplane LSH (literal planes cannot codegen at the
-    reference's dim 3072). Same bit/key semantics as the literal path:
-    bit = (embedding . plane) >= 0, key = sum(bit[b*width+r] << r)."""
+    """(doc, band, key) rows via one sign-bit matmul per Arrow batch
+    over a broadcast plane matrix: bit = (embedding . plane) >= 0,
+    key = sum(bit[b*width+r] << r). No plane enters the plan as a
+    literal, so the plan size does not grow with n_planes x dim."""
     import numpy as np  # noqa: PLC0415
 
     n_planes = len(planes)
@@ -734,10 +670,10 @@ def _lsh_band_keys_vectorized(
     )
 
 
-def _pair_cosine_vectorized():
-    """cosine(a, b) over two array columns as one numpy batch op —
-    the verification kernel for production dims (the JVM zip_with/
-    aggregate lambda walk is O(dim) interpreted steps per pair)."""
+def _pair_cosine_udf():
+    """cosine(a, b) over two array columns as one numpy batch op (the
+    JVM zip_with/aggregate lambda walk of pair_cosine is O(dim)
+    interpreted steps per pair)."""
     import numpy as np  # noqa: PLC0415
 
     @F.pandas_udf("double")
@@ -765,17 +701,17 @@ def embedding_near_dup_lsh(
     seed: int = 42,
     dim: int | None = None,
     id_col: str = "vec_id",
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """Random-hyperplane LSH blocking for embedding near-dup: sign-bit
     signature over seeded Gaussian planes, banded bucket join (pairs
     only meet inside a shared band bucket — never O(n^2)), then exact
     cosine verification. Deterministic given the seed.
 
-    The signature is literal-codegen'd below LITERAL_MATH_MAX_TERMS
-    plane literals (JVM-side, oracle-expressible) and a broadcast-numpy
-    matmul per Arrow batch above it (the only plan that survives
-    production dims); `vectorized` forces a path."""
+    The signature is one broadcast-numpy matmul per Arrow batch; the
+    bucket join moves ids only (no embedding payload in the shuffle);
+    distinct pairs come FIRST (a pair colliding in several bands is
+    verified once, not per band), then one numpy-batch cosine per
+    pair."""
     if dim is None:
         row = embeddings.select(F.size("embedding")).first()
         if row is None:  # empty input: no pairs, well-typed result
@@ -784,86 +720,35 @@ def embedding_near_dup_lsh(
             )
         dim = row[0]
     planes = _random_planes(n_planes, dim, seed)
-    width = n_planes // bands
-    if vectorized is None:
-        vectorized = n_planes * dim > LITERAL_MATH_MAX_TERMS
-
-    if vectorized:
-        # bucket join over ids only (no embedding payload in the
-        # shuffle), distinct pairs FIRST (a pair colliding in several
-        # bands is verified once, not per band), then one numpy-batch
-        # cosine per pair
-        banded = _lsh_band_keys_vectorized(embeddings, planes, bands, id_col)
-        right = banded.select(
-            F.col("band").alias("band2"), F.col("key").alias("key2"),
-            F.col("doc").alias("vec_b"),
-        )
-        pair_ids = (
-            banded.join(
-                right,
-                (banded["band"] == right["band2"])
-                & (banded["key"] == right["key2"])
-                & (banded["doc"] < right["vec_b"]),
-            )
-            .select(F.col("doc").alias("vec_a"), "vec_b")
-            .distinct()
-        )
-        ea = embeddings.select(
-            F.col(id_col).alias("vec_a"), F.col("embedding").alias("emb_a")
-        )
-        eb = embeddings.select(
-            F.col(id_col).alias("vec_b"), F.col("embedding").alias("emb_b")
-        )
-        cos_udf = _pair_cosine_vectorized()
-        cands = (
-            pair_ids.join(ea, "vec_a")
-            .join(eb, "vec_b")
-            .select(
-                "vec_a", "vec_b",
-                cos_udf(F.col("emb_a"), F.col("emb_b")).alias("cosine"),
-            )
-        )
-        return cands.filter(F.col("cosine") >= threshold)
-    else:
-        def dot_lit(vec: list[float]):
-            lit = F.array(*[F.lit(float(v)) for v in vec])
-            return F.aggregate(
-                F.zip_with(F.col("embedding"), lit, lambda x, y: x.cast("double") * y),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )
-
-        bits = [F.when(dot_lit(p) >= 0, F.lit(1)).otherwise(F.lit(0)) for p in planes]
-        band_keys = [
-            sum(
-                (bits[b * width + r] * F.lit(1 << r) for r in range(width)),
-                start=F.lit(0),
-            )
-            for b in range(bands)
-        ]
-        banded = embeddings.select(
-            F.col(id_col).alias("doc"), "embedding",
-            F.explode(F.array(*[
-                F.struct(F.lit(b).alias("band"), band_keys[b].alias("key"))
-                for b in range(bands)
-            ])).alias("bk"),
-        ).select("doc", "embedding", "bk.band", "bk.key")
-
+    banded = _lsh_band_keys(embeddings, planes, bands, id_col)
     right = banded.select(
         F.col("band").alias("band2"), F.col("key").alias("key2"),
-        F.col("doc").alias("vec_b"), F.col("embedding").alias("emb_b"),
+        F.col("doc").alias("vec_b"),
     )
-    cands = (
+    pair_ids = (
         banded.join(
             right,
             (banded["band"] == right["band2"])
             & (banded["key"] == right["key2"])
             & (banded["doc"] < right["vec_b"]),
         )
-        .select(
-            F.col("doc").alias("vec_a"), "vec_b",
-            pair_cosine(F.col("embedding"), F.col("emb_b")).alias("cosine"),
-        )
+        .select(F.col("doc").alias("vec_a"), "vec_b")
         .distinct()
+    )
+    ea = embeddings.select(
+        F.col(id_col).alias("vec_a"), F.col("embedding").alias("emb_a")
+    )
+    eb = embeddings.select(
+        F.col(id_col).alias("vec_b"), F.col("embedding").alias("emb_b")
+    )
+    cos_udf = _pair_cosine_udf()
+    cands = (
+        pair_ids.join(ea, "vec_a")
+        .join(eb, "vec_b")
+        .select(
+            "vec_a", "vec_b",
+            cos_udf(F.col("emb_a"), F.col("emb_b")).alias("cosine"),
+        )
     )
     return cands.filter(F.col("cosine") >= threshold)
 
@@ -1603,7 +1488,6 @@ def kmeans_train(
     embeddings: DataFrame,
     k: int = 8,
     n_iter: int = 5,
-    vectorized: bool | None = None,
     stats: dict | None = None,
 ) -> list[list[float]]:
     """Spherical k-means by Lloyd's iteration — trains the centroid
@@ -1614,17 +1498,16 @@ def kmeans_train(
     Semantics: deterministic init = the k lowest-vec_id vectors (no
     RNG — reproducible across runs/engines); each iteration assigns
     every vector to its argmax-COSINE centroid (exactly ivf_assign,
-    first-max-wins tie-break, so both the literal-codegen and the
-    broadcast-numpy production path apply), then recomputes each
-    centroid as the element-wise mean of its members. Cosine-assign +
-    mean-update is the standard spherical-k-means step; centroid norm
-    does not affect the next assignment (cosine normalizes), so means
-    are NOT re-normalized — which keeps the update expressible in
-    exact oracle SQL. Empty cells keep their previous centroid.
+    first-max-wins tie-break), then recomputes each centroid as the
+    element-wise mean of its members. Cosine-assign + mean-update is
+    the standard spherical-k-means step; centroid norm does not affect
+    the next assignment (cosine normalizes), so means are NOT
+    re-normalized — which keeps the update expressible in exact oracle
+    SQL. Empty cells keep their previous centroid.
 
     Scale shape: per iteration exactly one pass over the data —
-    assignment (map-only; JVM codegen or one BLAS matmul per Arrow
-    batch) followed by posexplode + partial-agg mean per (cell, pos).
+    assignment (map-only; one BLAS matmul per Arrow batch) followed by
+    posexplode + partial-agg mean per (cell, pos).
     Only k*dim aggregated values ever reach the driver (the centroid
     matrix is a driver-resident artifact by definition — it is what
     gets broadcast back out), so driver traffic is O(k*dim*n_iter),
@@ -1641,7 +1524,7 @@ def kmeans_train(
         return []
     dim = len(cents[0])
     for it in range(n_iter):
-        assigned = ivf_assign(embeddings, cents, vectorized=vectorized)
+        assigned = ivf_assign(embeddings, cents)
         means = (
             assigned.select(
                 "cell", F.posexplode("embedding").alias("pos", "val")
@@ -3314,7 +3197,6 @@ def semantic_dedup_pairs(
     centroids: list[list[float]],
     threshold: float = 0.9,
     id_col: str = "vec_id",
-    vectorized: bool | None = None,
     max_cell_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup-shaped semantic near-dup (Abbas et al. 2023): cluster
@@ -3333,8 +3215,8 @@ def semantic_dedup_pairs(
         same cell when centroids are meaningful) — the trade SemDeDup
         makes deliberately; the LSH variant covers the complement.
 
-    Assignment auto-vectorizes above LITERAL_MATH_MAX_TERMS exactly
-    like the ANN path. Returns (vec_a, vec_b, cell, cosine) pairs,
+    Assignment is ivf_assign, the same Arrow matmul as the ANN path.
+    Returns (vec_a, vec_b, cell, cosine) pairs,
     vec_a < vec_b, cosine >= threshold — keep min(vec_a) per group for
     the survivor set, same convention as the other near-dup ops.
 
@@ -3354,7 +3236,7 @@ def semantic_dedup_pairs(
         # adapt the caller's id column on the way in and restore it on
         # the way out
         src = embeddings.withColumnRenamed(id_col, "vec_id")
-    assigned = ivf_assign(src, centroids, vectorized=vectorized)
+    assigned = ivf_assign(src, centroids)
     if id_col != "vec_id":
         assigned = assigned.withColumnRenamed("vec_id", id_col)
     keys = ["cell"]
@@ -3666,22 +3548,17 @@ def embedding_norm_stats(embeddings: DataFrame) -> DataFrame:
 def kmeans_inertia(
     embeddings: DataFrame,
     centroids: list[list[float]],
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """Clustering-quality report: per cell, member count and mean
     cosine DISTANCE (1 - cos) to the assigned centroid — the inertia
     curve that picks k and flags degenerate cells before an IVF index
-    or a SemDeDup pass trusts the clustering. Same argmax-cosine
-    assignment kernel as ivf_assign (auto-vectorized above the literal
-    threshold) run with `with_score=True`, so the winning cosine comes
-    out of the assignment itself — on the vectorized path that is the
-    row max the matmul already computed, NOT a re-score against a
-    centroid-literal array (re-scoring was the r4 codegen blowup: at
-    dim 3072 x nlist 1024 the literal array is 3M terms and cannot
-    codegen, defeating the vectorized assignment). One agg on cell."""
-    assigned = ivf_assign(
-        embeddings, centroids, vectorized=vectorized, with_score=True
-    )
+    or a SemDeDup pass trusts the clustering. The argmax-cosine
+    assignment is ivf_assign run with `with_score=True`, so the winning
+    cosine is the row max the matmul already computed, NOT a re-score
+    against a centroid-literal array (re-scoring was the r4 codegen
+    blowup: at dim 3072 x nlist 1024 the literal array is 3M terms and
+    cannot codegen). One agg on cell."""
+    assigned = ivf_assign(embeddings, centroids, with_score=True)
     return (
         assigned.select(
             "cell", (F.lit(1.0) - F.col("best_cos")).alias("dist")

@@ -64,13 +64,6 @@ def stream_triples(pages_stream: DataFrame) -> DataFrame:
     )
 
 
-def stream_mentions(pages_stream: DataFrame) -> DataFrame:
-    """pages stream → mention rows (stateless, append mode)."""
-    docs = stages.extract_text(pages_stream)
-    chunks = stages.chunk(docs)
-    return stages.mentions_of(stages.extract(chunks))
-
-
 def dedup_pages_stream(
     pages_stream: DataFrame, watermark: str = "1 hour"
 ) -> DataFrame:

@@ -370,15 +370,3 @@ def sanitize_label(label: str | None) -> str:
     if out and not out[0].isalpha() and out[0] != "_":
         out = "_" + out
     return out or "Entity"
-
-
-# --------------------------------------------------------------------------
-# Misc deterministic helpers
-# --------------------------------------------------------------------------
-
-def stable_hash64(value: str) -> int:
-    """Deterministic signed 64-bit hash (md5-based) — used for
-    subject-hash partitioning; identical across Python/Spark reimpls."""
-    d = hashlib.md5(value.encode("utf-8")).digest()
-    v = int.from_bytes(d[:8], "big", signed=True)
-    return v

@@ -214,9 +214,9 @@ def test_bpe_train_job_count_independent_of_merges(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_bpe_encode_vectorized_matches_literal(spark):
-    """The Arrow encoder equals the sequential (literal) encode_word
-    per doc, on a trained merge list over real corpus text."""
+def test_bpe_encode_vectorized_matches_sequential(spark):
+    """The Arrow encoder equals the sequential encode_word per doc, on
+    a trained merge list over real corpus text."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     merges = [
         (r["left"], r["right"])
@@ -230,7 +230,7 @@ def test_bpe_encode_vectorized_matches_literal(spark):
     assert len(got) == docs.count()
 
 
-def test_bpe_encode_vectorized_matches_literal_randomized(spark):
+def test_bpe_encode_vectorized_matches_sequential_randomized(spark):
     """Seeded property test: Arrow encoder == sequential encode_word,
     on adversarial short alphabets where merge chains stack deep (runs
     of repeated symbols: the left-to-right non-overlapping edge case)

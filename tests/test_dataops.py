@@ -190,56 +190,106 @@ def test_ivf_index_materialized_prunes_partitions(spark, tmp_path):
     )[1].split("]")[0]
 
 
+def _unit_np(mat):
+    import numpy as np
+
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat / np.where(norms == 0.0, 1.0, norms)
+
+
+def _np_rows(df):
+    """(ids, float64 matrix) of a (vec_id, embedding) frame, by vec_id."""
+    import numpy as np
+
+    rows = df.select("vec_id", "embedding").orderBy("vec_id").collect()
+    return ([r["vec_id"] for r in rows],
+            np.asarray([r["embedding"] for r in rows], dtype=np.float64))
+
+
 def test_ivf_assign_vectorized_matches_literal(spark):
-    """The broadcast-numpy pandas-UDF path and the literal-codegen path
-    are two physical strategies for the SAME operator: at dim 64 /
-    nlist 8 (under the auto-select threshold) forcing each path must
-    give bit-identical cell assignments AND bit-identical ANN top-k."""
+    """ivf_assign's Arrow matmul equals a sequential driver-side numpy
+    argmax-cosine per vector, and ivf_ann's top-k equals the exact
+    brute-force top-k restricted to the probed cells (dim 64, nlist 8)."""
+    import numpy as np
+
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = [
         [float(x) for x in r["embedding"]]
         for r in emb.orderBy("vec_id").limit(8).collect()
     ]
-    lit = {r["vec_id"]: r["cell"]
-           for r in dataops.ivf_assign(emb, cents, vectorized=False).collect()}
-    vec = {r["vec_id"]: r["cell"]
-           for r in dataops.ivf_assign(emb, cents, vectorized=True).collect()}
-    assert lit == vec and len(lit) > 0
+    ids, x = _np_rows(emb)
+    sims = _unit_np(x) @ _unit_np(np.asarray(cents)).T
+    want = dict(zip(ids, np.argmax(sims, axis=1).tolist()))
+    got = {r["vec_id"]: r["cell"]
+           for r in dataops.ivf_assign(emb, cents).collect()}
+    assert got == want and len(got) > 0
 
     q = cents[0]
-    topk_lit = [(r["vec_id"], r["score"]) for r in
-                dataops.ivf_ann(emb, cents, q, 10, 3, vectorized=False).collect()]
-    topk_vec = [(r["vec_id"], r["score"]) for r in
-                dataops.ivf_ann(emb, cents, q, 10, 3, vectorized=True).collect()]
-    assert topk_lit == topk_vec
+    qsims = (_unit_np(np.asarray(cents)) @ _unit_np(np.asarray([q])).T)[:, 0]
+    probe = sorted(range(len(cents)), key=lambda c: -qsims[c])[:3]
+    members = [i for i, c in want.items() if c in probe]
+    truth = [(r["vec_id"], r["score"]) for r in dataops.brute_force_ann(
+        emb.filter(F.col("vec_id").isin(members)), q, 10).collect()]
+    topk = [(r["vec_id"], r["score"]) for r in
+            dataops.ivf_ann(emb, cents, q, 10, 3).collect()]
+    assert topk == truth and len(topk) == 10
 
-    # plan check: the vectorized path runs Arrow-batched Python, the
-    # literal path stays whole-stage-codegen JVM
-    vplan = dataops.ivf_assign(emb, cents, vectorized=True)._jdf.queryExecution(
+    # plan check: assignment runs Arrow-batched Python
+    plan = dataops.ivf_assign(emb, cents)._jdf.queryExecution(
     ).executedPlan().toString()
-    lplan = dataops.ivf_assign(emb, cents, vectorized=False)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "ArrowEvalPython" in vplan
-    assert "ArrowEvalPython" not in lplan
+    assert "ArrowEvalPython" in plan
+
+
+def test_ivf_assign_identical_centroids_pick_lower_cell(spark):
+    """First-max-wins tie-break: with two identical centroids every
+    vector lands in the lower cell id; a zero-norm vector scores 0
+    against every centroid, so it ties too and also takes cell 0."""
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, 0.5]), (3, [0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    rows = dataops.ivf_assign(emb, [[0.6, 0.8], [0.6, 0.8]],
+                              with_score=True).collect()
+    assert {r["vec_id"]: r["cell"] for r in rows} == {0: 0, 1: 0, 2: 0, 3: 0}
+    assert {r["vec_id"]: r["best_cos"] for r in rows}[3] == 0.0
+
+
+def test_ivf_assign_empty_centroids_raises(spark):
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="centroids is an empty list"):
+        dataops.ivf_assign(emb, [])
 
 
 def test_lsh_vectorized_matches_literal(spark):
-    """Same parity contract for the random-hyperplane signature: both
-    paths must produce the same verified near-dup pairs at dim 64."""
+    """The LSH pairs equal a sequential numpy reference: sign bits over
+    the same seeded planes, 8 band keys of 2 bits, every pair sharing a
+    (band, key) bucket, kept when its exact cosine is >= 0.4."""
+    import numpy as np
+
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    lit = {(r["vec_a"], r["vec_b"]): round(r["cosine"], 9)
+    ids, x = _np_rows(emb)
+    bits = (x @ np.asarray(dataops._random_planes(16, 64, 42)).T) >= 0.0
+    keys = bits[:, 0::2].astype(np.int64) | (bits[:, 1::2].astype(np.int64) << 1)
+    unit = _unit_np(x)
+    want = {}
+    for i in range(len(ids)):
+        for j in range(i + 1, len(ids)):
+            if (keys[i] == keys[j]).any():
+                cos = float(unit[i] @ unit[j])
+                if cos >= 0.4:
+                    want[(ids[i], ids[j])] = round(cos, 9)
+    got = {(r["vec_a"], r["vec_b"]): round(r["cosine"], 9)
            for r in dataops.embedding_near_dup_lsh(
-               emb, threshold=0.4, vectorized=False).collect()}
-    vec = {(r["vec_a"], r["vec_b"]): round(r["cosine"], 9)
-           for r in dataops.embedding_near_dup_lsh(
-               emb, threshold=0.4, vectorized=True).collect()}
-    assert lit == vec and len(lit) > 0
+               emb, threshold=0.4).collect()}
+    assert got == want and len(got) > 0
 
 
 def test_vector_math_highdim_green(spark):
     """Production dims (dim 1024, nlist 256 — the regime where literal
-    codegen blows the JVM 64 KB method limit): the auto-select must
-    pick the vectorized path and the full IVF + LSH flows run green."""
+    codegen would blow the JVM 64 KB method limit): the full IVF + LSH
+    flows run green on the Arrow matmul."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -252,7 +302,6 @@ def test_vector_math_highdim_green(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = [rows[i][1] for i in range(256)]
 
-    # auto-select: 256 * 1024 literals >> threshold -> ArrowEvalPython
     plan = dataops.ivf_assign(emb, cents)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "ArrowEvalPython" in plan
@@ -806,22 +855,9 @@ def test_kmeans_train_matches_numpy(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
     )
-    got = dataops.kmeans_train(df, k=3, n_iter=3, vectorized=False)
+    got = dataops.kmeans_train(df, k=3, n_iter=3)
     want, _ = _kmeans_numpy_reference(vecs, k=3, n_iter=3)
     assert np.allclose(np.asarray(got), want, atol=1e-9)
-
-
-def test_kmeans_train_vectorized_path_agrees(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    vecs = rng.normal(size=(50, 8)).round(3).tolist()
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
-    )
-    lit = dataops.kmeans_train(df, k=4, n_iter=2, vectorized=False)
-    vec = dataops.kmeans_train(df, k=4, n_iter=2, vectorized=True)
-    assert np.allclose(np.asarray(lit), np.asarray(vec), atol=1e-12)
 
 
 def test_kmeans_empty_cell_keeps_centroid(spark):
@@ -833,7 +869,7 @@ def test_kmeans_empty_cell_keeps_centroid(spark):
         (3, [0.0, 1.0]), (4, [0.05, 0.95]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = dataops.kmeans_train(df, k=3, n_iter=2, vectorized=False)
+    cents = dataops.kmeans_train(df, k=3, n_iter=2)
     assert len(cents) == 3
     assert all(all(math.isfinite(x) for x in c) for c in cents)
 
@@ -922,7 +958,7 @@ def test_ivf_with_trained_centroids_recovers_clusters(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
     )
-    trained = dataops.kmeans_train(df, k=4, n_iter=4, vectorized=False)
+    trained = dataops.kmeans_train(df, k=4, n_iter=4)
 
     def cos(a, b):
         a, b = np.asarray(a), np.asarray(b)
@@ -932,7 +968,7 @@ def test_ivf_with_trained_centroids_recovers_clusters(spark):
         assert max(cos(c, t) for t in trained) > 0.99
     sizes = {
         r["cell"]: r["n"]
-        for r in dataops.ivf_assign(df, trained, vectorized=False)
+        for r in dataops.ivf_assign(df, trained)
         .groupBy("cell").agg(F.count("*").alias("n")).collect()
     }
     assert sorted(sizes) == [0, 1, 2, 3]
@@ -942,9 +978,7 @@ def test_ivf_with_trained_centroids_recovers_clusters(spark):
     truth = {r["vec_id"] for r in dataops.brute_force_ann(df, q, k=10).collect()}
     got = {
         r["vec_id"]
-        for r in dataops.ivf_ann(
-            df, trained, q, k=10, n_probe=1, vectorized=False
-        ).collect()
+        for r in dataops.ivf_ann(df, trained, q, k=10, n_probe=1).collect()
     }
     assert got == truth
 
@@ -1154,20 +1188,16 @@ def test_kmeans_oracle_sql_handles_emptied_cell(spark):
     import duckdb
 
     import __spark_entry__ as em
-    from kgspark.query import cosine_score
 
     rows = [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]),
             (3, [0.6, 0.8])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = dataops.kmeans_train(df, k=2, n_iter=2, vectorized=False)
-    assigned = dataops.ivf_assign(df, cents, vectorized=False)
-    scores = F.array(*[cosine_score(F.col("embedding"), c) for c in cents])
+    cents = dataops.kmeans_train(df, k=2, n_iter=2)
     got = {
         r["cell"]: (r["n"], r["avg_cos"])
-        for r in assigned.select(
-            "cell", F.element_at(scores, F.col("cell") + 1).alias("own")
-        ).groupBy("cell").agg(
-            F.count("*").alias("n"), F.round(F.avg("own"), 6).alias("avg_cos")
+        for r in dataops.ivf_assign(df, cents, with_score=True)
+        .groupBy("cell").agg(
+            F.count("*").alias("n"), F.round(F.avg("best_cos"), 6).alias("avg_cos")
         ).collect()
     }
     con = duckdb.connect()
@@ -1924,7 +1954,7 @@ def test_lm_perplexity_buckets_split_and_order(spark):
 
 
 def test_kmeans_inertia_vectorized_no_centroid_literals(spark):
-    """r5 directive 1: the vectorized inertia path must NOT rebuild the
+    """r5 directive 1: the inertia plan must NOT rebuild the
     all-centroid cosine literal array (the r4 codegen blowup) — the
     distance comes from the best_cos the assignment matmul already
     computed. Distinctive centroid components would appear verbatim in
@@ -1938,17 +1968,16 @@ def test_kmeans_inertia_vectorized_no_centroid_literals(spark):
     )
     cents = [[marker, 0.0], [0.0, marker]]
 
-    vplan = kmeans_inertia(emb, cents, vectorized=True)._jdf.queryExecution(
+    plan = kmeans_inertia(emb, cents)._jdf.queryExecution(
     ).executedPlan().toString()
-    lplan = kmeans_inertia(emb, cents, vectorized=False)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "ArrowEvalPython" in vplan and str(marker) not in vplan
-    assert "ArrowEvalPython" not in lplan and str(marker) in lplan
+    assert "ArrowEvalPython" in plan and str(marker) not in plan
 
 
 def test_kmeans_inertia_paths_agree(spark):
-    """Both physical strategies are the same operator: identical cells
-    and member counts, distances equal to float tolerance."""
+    """kmeans_inertia equals a sequential numpy reference: per cell the
+    member count and the mean of 1 - argmax cosine, at 6 dp."""
+    import numpy as np
+
     from kgspark.dataops import kmeans_inertia
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1956,20 +1985,22 @@ def test_kmeans_inertia_paths_agree(spark):
         [float(x) for x in r["embedding"]]
         for r in emb.orderBy("vec_id").limit(6).collect()
     ]
-    lit = {r["cell"]: r for r in kmeans_inertia(
-        emb, cents, vectorized=False).collect()}
-    vec = {r["cell"]: r for r in kmeans_inertia(
-        emb, cents, vectorized=True).collect()}
-    assert set(lit) == set(vec) and lit
-    for c in lit:
-        assert lit[c]["n_members"] == vec[c]["n_members"]
-        assert abs(lit[c]["avg_cos_dist"] - vec[c]["avg_cos_dist"]) <= 1e-6
+    _, x = _np_rows(emb)
+    sims = _unit_np(x) @ _unit_np(np.asarray(cents)).T
+    cells = np.argmax(sims, axis=1)
+    dist = 1.0 - sims.max(axis=1)
+    want = {int(c): (int((cells == c).sum()), float(dist[cells == c].mean()))
+            for c in np.unique(cells)}
+    got = {r["cell"]: r for r in kmeans_inertia(emb, cents).collect()}
+    assert set(got) == set(want) and got
+    for c, (n, avg) in want.items():
+        assert got[c]["n_members"] == n
+        assert abs(got[c]["avg_cos_dist"] - avg) <= 1e-6
 
 
 def test_ivf_assign_with_score_matches_rescoring(spark):
     """with_score=True's best_cos equals the max cosine over all
-    centroids on both paths (spot-checked against a driver-side
-    recompute)."""
+    centroids (spot-checked against a driver-side recompute)."""
     import math
 
     from kgspark.dataops import ivf_assign
@@ -1986,14 +2017,11 @@ def test_ivf_assign_with_score_matches_rescoring(spark):
         nb = math.sqrt(sum(x * x for x in b)) or 1.0
         return dot / (na * nb)
 
-    for vectorized in (False, True):
-        rows = ivf_assign(emb, cents, vectorized=vectorized,
-                          with_score=True).collect()
-        assert rows
-        for r in rows:
-            want = max(cos([float(x) for x in r["embedding"]], c)
-                       for c in cents)
-            assert abs(r["best_cos"] - want) <= 1e-9, (vectorized, r["vec_id"])
+    rows = ivf_assign(emb, cents, with_score=True).collect()
+    assert rows
+    for r in rows:
+        want = max(cos([float(x) for x in r["embedding"]], c) for c in cents)
+        assert abs(r["best_cos"] - want) <= 1e-9, r["vec_id"]
 
 
 def test_zipf_slope_plan_limits_before_rank(spark):
