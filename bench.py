@@ -354,7 +354,8 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
         ]
         timed(
             "ann_ivf_highdim_assign",
-            lambda: ivf_assign(emb_hd, cents_hd).count(),
+            # consume `cell`: a bare count() prunes the assignment UDF
+            lambda: ivf_assign(emb_hd, cents_hd).agg(F.max("cell")).collect(),
         )
         timed(
             "embedding_lsh_highdim",

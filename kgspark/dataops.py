@@ -136,6 +136,66 @@ def _band_sig(cols, band: int, hash_mode: str):
     ).cast("long")
 
 
+def _bucket_pairs(keys: DataFrame) -> DataFrame:
+    """The band-bucket self-join of every banded-LSH blocker: (id, band,
+    key) rows -> distinct (id_a, id_b) pairs, id_a < id_b, that share
+    at least one (band, key) bucket. It moves ids only and is the one
+    shuffle that touches pairs; a pair colliding in several bands comes
+    out once."""
+    a = keys.select(F.col("id").alias("id_a"), "band", "key")
+    b = keys.select(F.col("id").alias("id_b"), "band", "key")
+    return (
+        a.join(b, ["band", "key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def _minhash_pairs(
+    shingles: DataFrame,
+    n_hashes: int,
+    bands: int,
+    threshold: float,
+    hash_mode: str = "xxhash64",
+) -> DataFrame:
+    """MinHash blocking over (doc_id, shingle) rows -> (doc_a, doc_b,
+    jaccard): seeded signatures (sig_i = min over shingles of
+    hash(shingle, i)), one bucket key per band of n_hashes // bands
+    signature rows, the band-bucket join, then exact-Jaccard
+    verification of the candidates. hash_mode="md5" swaps the hash for
+    an engine-portable one (same candidates in DuckDB SQL) — use it for
+    cross-engine verification, xxhash64 in production."""
+    rows_per_band = n_hashes // bands
+    sigs = shingles.groupBy("doc_id").agg(
+        *[
+            F.min(_seeded_hash64(F.col("shingle"), i, hash_mode)).alias(f"h{i}")
+            for i in range(n_hashes)
+        ]
+    )
+    keys = sigs.select(
+        F.col("doc_id").alias("id"),
+        F.posexplode(
+            F.array(
+                *[
+                    _band_sig(
+                        [
+                            F.col(f"h{b * rows_per_band + r}")
+                            for r in range(rows_per_band)
+                        ],
+                        b, hash_mode,
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("band", "key"),
+    )
+    cands = _bucket_pairs(keys).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+    )
+    return ngram_jaccard(cands, shingles, threshold)
+
+
 def minhash_near_dup(
     documents: DataFrame,
     n_hashes: int = 16,
@@ -144,58 +204,12 @@ def minhash_near_dup(
     threshold: float = 0.7,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
-    """MinHash signatures -> banded buckets -> candidate pairs ->
-    exact-Jaccard verification. Identical algorithmic shape to
-    kgspark.linking.lsh_candidate_edges but over documents; the bucket
-    join is the only shuffle touching pairs. hash_mode="md5" swaps the
-    hash for an engine-portable one (same candidates in DuckDB SQL) —
-    use it for cross-engine verification, xxhash64 in production."""
-    rows_per_band = n_hashes // bands
-    sh = word_shingles(documents, shingle_n)
-
-    sigs = sh.groupBy("doc_id").agg(
-        *[
-            F.min(_seeded_hash64(F.col("shingle"), i, hash_mode)).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
+    """Document near-dup: _minhash_pairs over n-word shingles. S5 LSH
+    linking (kgspark.linking.similarity_edges) runs the same kernel over
+    character n-grams of entity names."""
+    return _minhash_pairs(
+        word_shingles(documents, shingle_n), n_hashes, bands, threshold, hash_mode
     )
-    buckets = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_sig(
-                            [
-                                F.col(f"h{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                            b, hash_mode,
-                        ).alias("sig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.sig")
-
-    left = buckets.select("band", "sig", F.col("doc_id").alias("doc_a"))
-    right = buckets.select(
-        F.col("band").alias("band2"), F.col("sig").alias("sig2"),
-        F.col("doc_id").alias("doc_b"),
-    )
-    cands = (
-        left.join(
-            right,
-            (left["band"] == right["band2"])
-            & (left["sig"] == right["sig2"])
-            & (left["doc_a"] < right["doc_b"]),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return ngram_jaccard(cands, sh, threshold)
 
 
 def ngram_jaccard(
@@ -637,7 +651,7 @@ def _lsh_band_keys(
     bands: int,
     id_col: str,
 ) -> DataFrame:
-    """(doc, band, key) rows via one sign-bit matmul per Arrow batch
+    """(id, band, key) rows via one sign-bit matmul per Arrow batch
     over a broadcast plane matrix: bit = (embedding . plane) >= 0,
     key = sum(bit[b*width+r] << r). No plane enters the plan as a
     literal, so the plan size does not grow with n_planes x dim."""
@@ -661,11 +675,11 @@ def _lsh_band_keys(
                 keys[:, b] |= bits[:, b * width + r].astype(np.int64) << r
         return pd.Series(list(keys))
 
-    # ids only: the bucket join below shuffles (doc, band, key), never
+    # ids only: the bucket join shuffles (id, band, key), never
     # the embedding payload — at scale that is 8x-the-ids instead of
     # 8x-the-corpus through the exchange
     return embeddings.select(
-        F.col(id_col).alias("doc"),
+        F.col(id_col).alias("id"),
         F.posexplode(keys_udf(F.col("embedding"))).alias("band", "key"),
     )
 
@@ -708,10 +722,10 @@ def embedding_near_dup_lsh(
     cosine verification. Deterministic given the seed.
 
     The signature is one broadcast-numpy matmul per Arrow batch; the
-    bucket join moves ids only (no embedding payload in the shuffle);
-    distinct pairs come FIRST (a pair colliding in several bands is
-    verified once, not per band), then one numpy-batch cosine per
-    pair."""
+    bucket join (_bucket_pairs, shared with MinHash blocking) moves ids
+    only (no embedding payload in the shuffle); distinct pairs come
+    FIRST (a pair colliding in several bands is verified once, not per
+    band), then one numpy-batch cosine per pair."""
     if dim is None:
         row = embeddings.select(F.size("embedding")).first()
         if row is None:  # empty input: no pairs, well-typed result
@@ -720,21 +734,9 @@ def embedding_near_dup_lsh(
             )
         dim = row[0]
     planes = _random_planes(n_planes, dim, seed)
-    banded = _lsh_band_keys(embeddings, planes, bands, id_col)
-    right = banded.select(
-        F.col("band").alias("band2"), F.col("key").alias("key2"),
-        F.col("doc").alias("vec_b"),
-    )
-    pair_ids = (
-        banded.join(
-            right,
-            (banded["band"] == right["band2"])
-            & (banded["key"] == right["key2"])
-            & (banded["doc"] < right["vec_b"]),
-        )
-        .select(F.col("doc").alias("vec_a"), "vec_b")
-        .distinct()
-    )
+    pair_ids = _bucket_pairs(
+        _lsh_band_keys(embeddings, planes, bands, id_col)
+    ).select(F.col("id_a").alias("vec_a"), F.col("id_b").alias("vec_b"))
     ea = embeddings.select(
         F.col(id_col).alias("vec_a"), F.col("embedding").alias("emb_a")
     )
@@ -2529,6 +2531,8 @@ def prefix_jaccard_join(
     Returns (doc_a, doc_b, jaccard) for pairs >= threshold, doc_a <
     doc_b, jaccard rounded to 6 dp.
     """
+    from decimal import Decimal  # noqa: PLC0415
+
     from pyspark.sql import Window  # noqa: PLC0415
 
     # same shingle convention as minhash/ngram_jaccard, so the exact
@@ -2553,9 +2557,11 @@ def prefix_jaccard_join(
         )
         .join(sizes, "doc_id")
     )
+    # 1 - t as an exact decimal: in floating point 1.0 - 0.8 < 0.2, and
+    # floor((1.0 - 0.8) * 5) + 1 would cut a 5-shingle prefix to 1 token
+    keep = F.lit(Decimal(1) - Decimal(repr(threshold)))
     prefix = ranked.filter(
-        F.col("rnk")
-        <= F.floor((1.0 - threshold) * F.col("sz")) + F.lit(1)
+        F.col("rnk") <= F.floor(keep * F.col("sz")) + F.lit(1)
     ).select("doc_id", "tok")
     a = prefix.select(F.col("doc_id").alias("doc_a"), "tok")
     b = prefix.select(F.col("doc_id").alias("doc_b"), "tok")

@@ -6,10 +6,12 @@ Two modes (SURVEY.md §7.2 M3):
     (neo4j_store.py:90) and is the default for the P/R gate.
   * "lsh"    — additive MinHash-banded blocking on character 3-gram
     shingles of the lowercased name, then exact Jaccard scoring on
-    candidate pairs with a threshold. DataFrame-native (explode +
-    min-agg + band bucket self-join), no MLlib dependency: at 10^12
-    scale the candidate join is the only shuffle, keyed on (band, sig)
-    buckets, so no O(n^2) pair enumeration ever materializes.
+    candidate pairs with a threshold. It is the MinHash kernel of
+    document near-dup (dataops._minhash_pairs) run over shingle_df:
+    explode + min-agg + the band-bucket self-join, no MLlib dependency.
+    At 10^12 scale the candidate join is the only shuffle, keyed on
+    (band, key) buckets, so no O(n^2) pair enumeration ever
+    materializes.
 """
 
 from __future__ import annotations
@@ -57,114 +59,39 @@ def shingle_df(names: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def lsh_candidate_edges(
-    names: DataFrame,
+def similarity_edges(
+    mentions: DataFrame,
+    mode: str = "exact",
     n_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.6,
 ) -> DataFrame:
-    """MinHash + banding + exact-Jaccard verification.
-
-    signatures: for hash seed i, sig_i = min over shingles of
-    xxhash64(shingle, i). Band key = hash of the band's signature slice.
-    Candidates = pairs sharing any band bucket (name_a < name_b to halve
-    the join). Verified score = |A∩B| / |A∪B| over distinct shingles.
-    """
-    rows_per_band = n_hashes // bands
-    sh = shingle_df(names, shingle_n).localCheckpoint(eager=True)
-
-    sigs = sh.groupBy("name").agg(
-        *[
-            F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = sigs.select("name", *band_cols)
-    buckets = banded.select(
-        "name",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("sig"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("name", F.col("bk.band").alias("band"), F.col("bk.sig").alias("sig"))
-
-    left = buckets.select(
-        F.col("band"), F.col("sig"), F.col("name").alias("name_a")
-    )
-    right = buckets.select(
-        F.col("band").alias("band2"), F.col("sig").alias("sig2"),
-        F.col("name").alias("name_b"),
-    )
-    cands = (
-        left.join(
-            right,
-            (left["band"] == right["band2"])
-            & (left["sig"] == right["sig2"])
-            & (left["name_a"] < right["name_b"]),
-        )
-        .select("name_a", "name_b")
-        .distinct()
-    )
-
-    # exact Jaccard on candidates via shingle-set join
-    sa = sh.select(F.col("name").alias("name_a"), F.col("shingle").alias("sh_a"))
-    sb = sh.select(F.col("name").alias("name_b"), F.col("shingle").alias("sh_b"))
-    inter = (
-        cands.join(sa, "name_a")
-        .join(sb, "name_b")
-        .filter(F.col("sh_a") == F.col("sh_b"))
-        .groupBy("name_a", "name_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sizes = sh.groupBy("name").agg(F.count("*").alias("n_sh"))
-    scored = (
-        inter.join(
-            sizes.select(F.col("name").alias("name_a"), F.col("n_sh").alias("na")),
-            "name_a",
-        )
-        .join(
-            sizes.select(F.col("name").alias("name_b"), F.col("n_sh").alias("nb")),
-            "name_b",
-        )
-        .select(
-            "name_a",
-            "name_b",
-            (
-                F.col("n_inter")
-                / (F.col("na") + F.col("nb") - F.col("n_inter"))
-            ).alias("score"),
-            F.lit("lsh").alias("kind"),
-        )
-        .filter(F.col("score") >= threshold)
-    )
-    return scored
-
-
-def similarity_edges(
-    mentions: DataFrame,
-    mode: str = "exact",
-    **lsh_kwargs,
-) -> DataFrame:
     """mentions -> sim_edges(name_a, name_b, score, kind).
 
     Exact-name self-pairs are ALWAYS included (guarantees reference-
     parity merging); LSH pairs are additive when mode="lsh"
-    (SURVEY.md §7.2 M3). Any other mode raises ValueError.
+    (SURVEY.md §7.2 M3): dataops._minhash_pairs over shingle_df(names,
+    shingle_n), score = exact Jaccard >= threshold, name_a < name_b.
+    Any other mode raises ValueError.
     """
     check_link_mode(mode)
     names = mentions.select("name").distinct()
     edges = exact_edges(names)
     if mode == "lsh":
-        edges = edges.unionByName(lsh_candidate_edges(names, **lsh_kwargs))
+        from .dataops import _minhash_pairs  # noqa: PLC0415
+
+        sh = shingle_df(names, shingle_n).localCheckpoint(eager=True)
+        pairs = _minhash_pairs(
+            sh.select(F.col("name").alias("doc_id"), "shingle"),
+            n_hashes, bands, threshold,
+        )
+        edges = edges.unionByName(
+            pairs.select(
+                F.col("doc_a").alias("name_a"),
+                F.col("doc_b").alias("name_b"),
+                F.col("jaccard").alias("score"),
+                F.lit("lsh").alias("kind"),
+            )
+        )
     return edges

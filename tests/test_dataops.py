@@ -206,7 +206,7 @@ def _np_rows(df):
             np.asarray([r["embedding"] for r in rows], dtype=np.float64))
 
 
-def test_ivf_assign_vectorized_matches_literal(spark):
+def test_ivf_assign_matches_numpy_and_brute_force(spark):
     """ivf_assign's Arrow matmul equals a sequential driver-side numpy
     argmax-cosine per vector, and ivf_ann's top-k equals the exact
     brute-force top-k restricted to the probed cells (dim 64, nlist 8)."""
@@ -262,7 +262,7 @@ def test_ivf_assign_empty_centroids_raises(spark):
         dataops.ivf_assign(emb, [])
 
 
-def test_lsh_vectorized_matches_literal(spark):
+def test_embedding_lsh_matches_numpy_reference(spark):
     """The LSH pairs equal a sequential numpy reference: sign bits over
     the same seeded planes, 8 band keys of 2 bits, every pair sharing a
     (band, key) bucket, kept when its exact cosine is >= 0.4."""
@@ -1405,6 +1405,8 @@ def test_data_quality_report_finds_injected_violations(spark):
 def test_prefix_jaccard_join_exact_vs_brute_force(spark):
     # guaranteed recall: result must EQUAL the brute-force all-pairs
     # jaccard at the threshold, including pairs sharing only rare tokens
+    seven = "alpha bravo charlie delta echo foxtrot golf"
+    twelve = "one two three four five six seven eight nine ten eleven twelve"
     rows = [
         (0, "the quick brown fox jumps over the lazy dog today", "en"),
         (1, "the quick brown fox jumps over the lazy dog tonight", "en"),
@@ -1412,14 +1414,15 @@ def test_prefix_jaccard_join_exact_vs_brute_force(spark):
         (3, "completely different text about spark query engines", "en"),
         (4, "completely different text about spark query planners", "en"),
         (5, "unrelated content entirely on its own here now ok", "en"),
+        # a doc and its one-word-shorter prefix: 4 of 5 shingles (J =
+        # 0.8) and 9 of 10 (J = 0.9), exactly at the threshold, where
+        # 1.0 - t in floating point falls below the true value
+        (6, seven, "en"),
+        (7, seven.rsplit(" ", 1)[0], "en"),
+        (8, twelve, "en"),
+        (9, twelve.rsplit(" ", 1)[0], "en"),
     ]
     d = spark.createDataFrame(rows, DOCS_DDL)
-    got = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dataops.prefix_jaccard_join(
-            d, threshold=0.3, n=3
-        ).collect()
-    }
 
     def sh(t):
         w = t.split()
@@ -1427,14 +1430,23 @@ def test_prefix_jaccard_join_exact_vs_brute_force(spark):
             " ".join(w[i : i + 3]) for i in range(max(len(w) - 2, 1))
         }
 
-    want = {}
-    for i in range(len(rows)):
-        for j in range(i + 1, len(rows)):
-            a, b = sh(rows[i][1]), sh(rows[j][1])
-            jac = len(a & b) / len(a | b)
-            if round(jac, 6) >= 0.3:
-                want[(i, j)] = round(jac, 6)
-    assert got == want and len(want) >= 3
+    for t in (0.3, 0.5, 0.6, 0.7, 0.8, 0.9):
+        got = {
+            (r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in dataops.prefix_jaccard_join(
+                d, threshold=t, n=3
+            ).collect()
+        }
+        want = {}
+        for i in range(len(rows)):
+            for j in range(i + 1, len(rows)):
+                a, b = sh(rows[i][1]), sh(rows[j][1])
+                jac = len(a & b) / len(a | b)
+                if round(jac, 6) >= t:
+                    want[(i, j)] = round(jac, 6)
+        assert got == want, t
+        assert (8, 9) in want and ((6, 7) in want) == (t <= 0.8)
+        assert t > 0.3 or len(want) >= 5
 
 
 def test_weighted_sample_deterministic_and_weight_sensitive(spark):
@@ -1953,7 +1965,7 @@ def test_lm_perplexity_buckets_split_and_order(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_kmeans_inertia_vectorized_no_centroid_literals(spark):
+def test_kmeans_inertia_arrow_plan_no_centroid_literals(spark):
     """r5 directive 1: the inertia plan must NOT rebuild the
     all-centroid cosine literal array (the r4 codegen blowup) — the
     distance comes from the best_cos the assignment matmul already
@@ -1973,7 +1985,7 @@ def test_kmeans_inertia_vectorized_no_centroid_literals(spark):
     assert "ArrowEvalPython" in plan and str(marker) not in plan
 
 
-def test_kmeans_inertia_paths_agree(spark):
+def test_kmeans_inertia_matches_numpy_reference(spark):
     """kmeans_inertia equals a sequential numpy reference: per cell the
     member count and the mean of 1 - argmax cosine, at 6 dp."""
     import numpy as np
