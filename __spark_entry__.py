@@ -47,6 +47,22 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
+def _on(
+    table: str, fn: str, **kwargs
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Driver query that reads one fixture table and calls one dataops
+    operator on it: `kgspark.dataops.<fn>(<table>, **kwargs)`. dataops
+    is imported when the query runs, so importing this module imports
+    no kgspark module."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from kgspark import dataops
+
+        return getattr(dataops, fn)(_read(spark, sf_dir, table), **kwargs)
+
+    return query
+
+
 _KG_FRAMES_CACHE: dict[str, dict] = {}
 
 
@@ -342,42 +358,6 @@ def _q_approx_distinct(spark, sf_dir):
         F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
         F.countDistinct("user_id").alias("exact_users"),
     )
-
-
-def _q_exact_dedup(spark, sf_dir):
-    from kgspark.dataops import exact_dedup
-
-    return exact_dedup(_read(spark, sf_dir, "documents"))
-
-
-def _q_doc_fingerprint(spark, sf_dir):
-    from kgspark.dataops import fingerprints
-
-    return fingerprints(_read(spark, sf_dir, "documents"))
-
-
-def _q_token_stats(spark, sf_dir):
-    from kgspark.dataops import token_stats
-
-    return token_stats(_read(spark, sf_dir, "documents"))
-
-
-def _q_quality_scores(spark, sf_dir):
-    from kgspark.dataops import quality_scores
-
-    return quality_scores(_read(spark, sf_dir, "documents"))
-
-
-def _q_lang_id(spark, sf_dir):
-    from kgspark.dataops import lang_id
-
-    return lang_id(_read(spark, sf_dir, "documents"))
-
-
-def _q_corpus_filter(spark, sf_dir):
-    from kgspark.dataops import corpus_filter
-
-    return corpus_filter(_read(spark, sf_dir, "documents"))
 
 
 def _q_top_terms(spark, sf_dir):
@@ -689,15 +669,6 @@ def _q_stratified_sample(spark, sf_dir):
     ).select("doc_id", "lang")
 
 
-def _q_char_entropy(spark, sf_dir):
-    """Character-distribution Shannon entropy per doc (bits) — the
-    gibberish/binary-junk gate; entropy from sum(c*log2 c) so only
-    algebraic aggregates shuffle."""
-    from kgspark.dataops import char_entropy
-
-    return char_entropy(_read(spark, sf_dir, "documents"))
-
-
 def _q_regional_revenue(spark, sf_dir):
     """TPC-H Q5 star-join shape: revenue per nation within a region —
     the fact table streams through BROADCAST dimension joins
@@ -765,30 +736,6 @@ def _q_customer_order_distribution(spark, sf_dir):
     )
 
 
-def _q_table_checksum(spark, sf_dir):
-    """Order-independent content checksum (xor of 64-bit row hashes +
-    count) over the orders key/status columns — the O(1)-output
-    snapshot-equality probe for migrations and CDC reconciliation;
-    one map-side pass, no sort."""
-    from kgspark.dataops import table_checksum
-
-    return table_checksum(
-        _read(spark, sf_dir, "orders"),
-        cols=["o_orderkey", "o_custkey", "o_orderstatus",
-              "o_orderpriority"],
-    )
-
-
-def _q_bigram_lm_score(spark, sf_dir):
-    """Bigram LM quality gate (stupid-backoff), trained in-engine:
-    p(w2|w1)=c12/c1 over the corpus; flags shuffled/gibberish docs a
-    unigram LM cannot see. Three map-side-combinable counts + hash
-    joins on the bigram key."""
-    from kgspark.dataops import bigram_lm_score
-
-    return bigram_lm_score(_read(spark, sf_dir, "documents"))
-
-
 def _q_hll_merged_distinct(spark, sf_dir):
     """Mergeable distinct-count sketches: per-event-type HLL sketches
     merged into a global estimate FROM THE SKETCHES (hll_union_agg) —
@@ -827,19 +774,6 @@ def _q_hll_merged_distinct(spark, sf_dir):
         )
         .filter(F.col("bound_ok"))
         .orderBy("partition")
-    )
-
-
-def _q_prefix_jaccard_near_dup(spark, sf_dir):
-    """EXACT set-similarity self-join (PPJoin-style prefix filtering)
-    over 3-word shingles at Jaccard >= 0.5 — the deterministic
-    complement to the MinHash/SimHash LSH families: guaranteed-recall
-    candidate generation by blocking on each doc's rarest-df prefix
-    shingles, never all-pairs."""
-    from kgspark.dataops import prefix_jaccard_join
-
-    return prefix_jaccard_join(
-        _read(spark, sf_dir, "documents"), threshold=0.5, n=3
     )
 
 
@@ -1014,15 +948,6 @@ def _q_fuzzy_vocab_linkage(spark, sf_dir):
     return fuzzy_string_join(probes, words, "p", "w", max_dist=1)
 
 
-def _q_value_equidepth_hist(spark, sf_dir):
-    """Equi-depth 10-bucket histogram of event values via the
-    distributed NTILE (range exchange + offsets — no single-task
-    global window); per-bucket range/count/mean."""
-    from kgspark.dataops import equidepth_histogram
-
-    return equidepth_histogram(_read(spark, sf_dir, "events"), k=10)
-
-
 def _q_dsir_importance(spark, sf_dir):
     """DSIR (Xie et al. 2023) importance scores over hashed unigram
     features: avg log p_target/p_corpus per doc, target = the
@@ -1032,113 +957,6 @@ def _q_dsir_importance(spark, sf_dir):
 
     docs = _read(spark, sf_dir, "documents")
     return dsir_importance(docs, docs.filter(F.col("doc_id") % 97 == 0))
-
-
-def _q_value_moments(spark, sf_dir):
-    """Drift-monitoring moments per event type: mean / sample stddev /
-    mean-median skew proxy / corr(value, hour-of-day) — co-moment
-    aggregates, map-side combinable, one small-key exchange."""
-    from kgspark.dataops import value_moments
-
-    return value_moments(_read(spark, sf_dir, "events"))
-
-
-def _q_event_funnel(spark, sf_dir):
-    """Ordered conversion funnel signup -> view -> purchase: stage k
-    admits only events at-or-after the user's stage-k-1 time; k
-    algebraic min-aggs on user_id, exact interpolated median
-    hours-from-previous per stage."""
-    from kgspark.dataops import funnel_stages
-
-    return funnel_stages(_read(spark, sf_dir, "events"))
-
-
-def _q_user_value_ewma(spark, sf_dir):
-    """Recency-weighted (EWMA, alpha=1/2, last 10 events) value
-    feature per user: unrolled lag expression over one time-ordered
-    window — single exchange, bit-deterministic summation order."""
-    from kgspark.dataops import ewma_features
-
-    return ewma_features(_read(spark, sf_dir, "events"))
-
-
-def _q_scd2_history(spark, sf_dir):
-    """Type-2 SCD materialization of the events change stream:
-    gaps-and-islands run collapse + lead() validity intervals — ONE
-    exchange on user_id shared by every window and the run agg."""
-    from kgspark.dataops import scd2_history
-
-    return scd2_history(_read(spark, sf_dir, "events"))
-
-
-def _q_orders_trailing_window(spark, sf_dir):
-    """Trailing 30-day RANGE-frame aggregate per customer (count /
-    sum / avg of order totals): time-range frames over epoch micros,
-    one exchange on o_custkey."""
-    from kgspark.dataops import trailing_window_agg
-
-    return trailing_window_agg(_read(spark, sf_dir, "orders"), days=30)
-
-
-def _q_sessionize(spark, sf_dir):
-    """Gap-based sessionization of the events stream (10-minute gap):
-    lag + running-sum window then hash agg, one exchange on user_id."""
-    from kgspark.dataops import sessionize
-
-    return sessionize(_read(spark, sf_dir, "events"), gap_seconds=600)
-
-
-def _q_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition filters per document: top-word fraction,
-    type/token ratio, duplicate-bigram fraction — explode + two
-    map-side-combinable hash aggs joined to a per-row bigram array
-    pass; linear in tokens."""
-    from kgspark.dataops import repetition_stats
-
-    return repetition_stats(_read(spark, sf_dir, "documents"))
-
-
-def _q_ngram_contamination(spark, sf_dir):
-    """Benchmark decontamination: flag training docs sharing any 8-word
-    shingle with the deterministic eval slice (doc_id % 97 == 0) — the
-    eval shingle set broadcasts, so the check costs one scan + agg."""
-    from kgspark.dataops import ngram_contamination
-
-    return ngram_contamination(_read(spark, sf_dir, "documents"))
-
-
-def _q_paragraph_dedup(spark, sf_dir):
-    """CCNet-style corpus-level paragraph dedup (4-word windows on
-    this newline-free fixture): drop every copy of any paragraph seen
-    in >=2 distinct docs; the anti-join build side holds ONLY the
-    duplicated-paragraph set, never the corpus."""
-    from kgspark.dataops import paragraph_dedup
-
-    return paragraph_dedup(
-        _read(spark, sf_dir, "documents"),
-        min_docs=2,
-        mode="window",
-        words_per_para=4,
-    )
-
-
-def _q_unigram_lm_score(spark, sf_dir):
-    """CCNet/KenLM-style LM quality gate with the SQL-trainable model:
-    corpus unigram LM -> per-doc avg -log p(w) + perplexity. One
-    explode, two map-side-combinable counts, one join on word."""
-    from kgspark.dataops import unigram_lm_score
-
-    return unigram_lm_score(_read(spark, sf_dir, "documents"))
-
-
-def _q_quality_classifier(spark, sf_dir):
-    """fastText-style hashing-trick linear classifier: bucketed
-    bag-of-words vs a broadcast (bucket, weight) table — the
-    fixed-size-model scoring pattern for 10^12-doc corpora. Weights
-    are a deterministic pseudo-model so the oracle checks end-to-end."""
-    from kgspark.dataops import quality_classifier
-
-    return quality_classifier(_read(spark, sf_dir, "documents"))
 
 
 def _q_winnow_fingerprint(spark, sf_dir):
@@ -1154,25 +972,6 @@ def _q_winnow_fingerprint(spark, sf_dir):
             F.concat_ws(",", F.sort_array(F.collect_list("fp")))
         ).alias("sketch_hash"),
     )
-
-
-def _q_winnow_near_dup(spark, sf_dir):
-    """Near-dup pairs by shared winnowing fingerprints — contiguous-
-    match detection (any shared >=6-word run fingerprints), bucket-
-    joined on the fingerprint with a max_df boilerplate cut."""
-    from kgspark.dataops import winnow_near_dup
-
-    return winnow_near_dup(_read(spark, sf_dir, "documents"))
-
-
-def _q_pii_scrub(spark, sf_dir):
-    """PII detection + redaction counts per document plus the scrubbed
-    text's fingerprint — one map-only JVM regex scan. The synthetic
-    corpus is PII-free (counts 0), so the oracle validates the shared
-    regex semantics; the planted-PII pytest carries the behavior."""
-    from kgspark.dataops import pii_scrub
-
-    return pii_scrub(_read(spark, sf_dir, "documents"))
 
 
 def _q_value_percentiles(spark, sf_dir):
@@ -1296,17 +1095,6 @@ def _q_quantized_embeddings(spark, sf_dir):
         F.size(F.filter(codes, lambda c: F.abs(c) == 127))
         .cast("long")
         .alias("n_sat"),
-    )
-
-
-def _q_pack_docs(spark, sf_dir):
-    """Greedy next-fit sequence packing (training-batch shaping) via
-    applyInPandas over deterministic hash buckets — the oracle replays
-    the identical sequential fold as a recursive CTE."""
-    from kgspark.dataops import pack_sequences
-
-    return pack_sequences(
-        _read(spark, sf_dir, "documents"), budget=2000, buckets=16
     )
 
 
@@ -1464,18 +1252,6 @@ def _q_near_dup_clusters(spark, sf_dir):
     return near_dup_clusters(
         _read(spark, sf_dir, "documents"), threshold=0.5, hash_mode="md5"
     ).orderBy("doc_id")
-
-
-def _q_simhash_near_dup(spark, sf_dir):
-    """SimHash near-dup in the engine-portable md5 signature mode so the
-    whole flow is bit-exact against the DuckDB oracle; the xxhash64
-    production mode (fully JVM-side) shares every line except the
-    signature kernel and is pytest-covered for pair-set agreement."""
-    from kgspark.dataops import simhash_near_dup
-
-    return simhash_near_dup(
-        _read(spark, sf_dir, "documents"), max_hamming=3, hash_mode="md5"
-    )
 
 
 def _q_media_stats(spark, sf_dir):
@@ -2053,16 +1829,6 @@ def _q_semantic_dedup(spark, sf_dir):
     )
 
 
-def _q_source_mix(spark, sf_dir):
-    """Per-source training-mix composition report: docs, distinct
-    normalized fingerprints, implied exact-dup rate, mean length,
-    total whitespace tokens (token semantics shared with token_stats
-    so the reports reconcile)."""
-    from kgspark.dataops import source_mix_report
-
-    return source_mix_report(_read(spark, sf_dir, "documents"))
-
-
 def _q_degree_histogram(spark, sf_dir):
     """Log2-bucketed degree distribution of the parts-co-ordered graph
     (the power-law diagnostic behind the engine's hub caps / salting
@@ -2074,39 +1840,6 @@ def _q_degree_histogram(spark, sf_dir):
     return degree_histogram(pairs)
 
 
-def _q_source_overlap(spark, sf_dir):
-    """Cross-source content overlap (Jaccard of fingerprint sets per
-    source pair sharing >= 1 doc) — the contamination diagnostic
-    before mixing crawls. prefix_tokens=5 fingerprints the first 5
-    normalized tokens (the syndication/mirror detector; full-content
-    fingerprints find nothing cross-source in this corpus, so the
-    prefix mode also makes the oracle comparison non-vacuous).
-    Fingerprint self-join: zero-intersection pairs never
-    materialize."""
-    from kgspark.dataops import source_overlap
-
-    return source_overlap(
-        _read(spark, sf_dir, "documents"), prefix_tokens=5
-    )
-
-
-def _q_per_source_sample(spark, sf_dir):
-    """Deterministic balanced sample: 3 docs per source by md5(doc_id)
-    order — reproducible across engines/runs/cluster sizes."""
-    from kgspark.dataops import per_source_sample
-
-    return per_source_sample(_read(spark, sf_dir, "documents"), k=3)
-
-
-def _q_zipf_slope(spark, sf_dir):
-    """Zipf exponent of the corpus term distribution (OLS slope of
-    ln freq on ln rank over the top-300 terms) — natural text ~ -1;
-    regr_slope is an algebraic agg, map-side combinable."""
-    from kgspark.dataops import zipf_slope
-
-    return zipf_slope(_read(spark, sf_dir, "documents"), top_n=300)
-
-
 def _q_negative_edges(spark, sf_dir):
     """Deterministic hash-bucket-blocked negative sampling over the
     parts-co-ordered graph: 30 non-edges drawn by md5 key — the
@@ -2116,27 +1849,6 @@ def _q_negative_edges(spark, sf_dir):
 
     pairs = co_order_pairs(_read(spark, sf_dir, "lineitem"))
     return negative_edges(pairs, k=30)
-
-
-def _q_collocations_pmi(spark, sf_dir):
-    """Top-25 adjacent-word collocations by PMI (min pair count 5) —
-    phrase mining / tokenizer merge candidates. Join-based adjacency
-    (posexplode + pos+1 self-join); corpus totals ride as broadcast
-    1-row aggs inside the plan."""
-    from kgspark.dataops import collocations_pmi
-
-    return collocations_pmi(
-        _read(spark, sf_dir, "documents"), min_count=5, k=25
-    )
-
-
-def _q_embedding_norm_stats(spark, sf_dir):
-    """Vector sanity gate: corpus size, dim spread, zero-norm count,
-    norm distribution — catches the zero-norm/NaN-topk bug class at
-    ingest instead of at query time."""
-    from kgspark.dataops import embedding_norm_stats
-
-    return embedding_norm_stats(_read(spark, sf_dir, "embeddings"))
 
 
 def _q_kmeans_inertia(spark, sf_dir):
@@ -2152,25 +1864,6 @@ def _q_kmeans_inertia(spark, sf_dir):
         for r in emb.orderBy("vec_id").limit(8).collect()
     ]
     return kmeans_inertia(emb, cents)
-
-
-def _q_value_twap(spark, sf_dir):
-    """Time-weighted average value per user: each event weighted by its
-    holding interval (micros until the next event) — the standard
-    irregular-sampling correction; exact integer weights keep it
-    engine-deterministic at 6 dp."""
-    from kgspark.dataops import value_twap
-
-    return value_twap(_read(spark, sf_dir, "events"))
-
-
-def _q_lm_perplexity_buckets(spark, sf_dir):
-    """CCNet head/middle/tail perplexity split, self-calibrated on the
-    corpus's own unigram-LM score distribution (exact interpolated
-    1/3 and 2/3 percentiles, broadcast threshold row, one CASE)."""
-    from kgspark.dataops import lm_perplexity_buckets
-
-    return lm_perplexity_buckets(_read(spark, sf_dir, "documents"))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -2203,20 +1896,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     query whose underlying code changed this round is inside slots
     1-50; (b) every never-driver-checked oracle query is inside; (c)
     the full-dict check_oracle --json artifact is committed.
+
+    A row `"sessionize": _on("events", "sessionize", gap_seconds=600)`
+    reads: the query reads the `events` fixture table and returns
+    `kgspark.dataops.sessionize(events, gap_seconds=600)`. A query that
+    does more than that one call (another module, a post-projection,
+    its own plan) is a `_q_*` function.
     """
     return {
         # ---- 1. oracle-backed r4 adds (first driver-green in r5) ----
-        "collocations_pmi": _q_collocations_pmi,
-        "embedding_norm_stats": _q_embedding_norm_stats,
+        "collocations_pmi": _on(
+            "documents", "collocations_pmi", min_count=5, k=25
+        ),
+        "embedding_norm_stats": _on("embeddings", "embedding_norm_stats"),
         "kmeans_inertia": _q_kmeans_inertia,           # also r5-fixed
-        "lm_perplexity_buckets": _q_lm_perplexity_buckets,
+        "lm_perplexity_buckets": _on("documents", "lm_perplexity_buckets"),
         # ---- 2. added/touched this round ----
         # r6: one S1->S7 stage definition for build_kg_frames + Pipeline
         "kg_triples": _q_kg_triples,
         "kg_canonical": _q_kg_canonical,
         "kg_incremental": _q_kg_incremental,
         # r5-fixed scale paths (oracle-backed)
-        "zipf_slope": _q_zipf_slope,
+        "zipf_slope": _on("documents", "zipf_slope", top_n=300),
         "semantic_dedup_pairs": _q_semantic_dedup,
         # one Arrow-matmul vector-math path: every ivf_assign / LSH
         # consumer re-verified (ann_ivf_vectorized_topk runs the
@@ -2230,7 +1931,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_canonical_lsh": _q_kg_canonical_lsh,
         "minhash_near_dup": _q_minhash_near_dup,
         "near_dup_clusters": _q_near_dup_clusters,
-        "prefix_jaccard_near_dup": _q_prefix_jaccard_near_dup,
+        "prefix_jaccard_near_dup": _on(
+            "documents", "prefix_jaccard_join", threshold=0.5, n=3
+        ),
+        # md5_hash60 is the one md5 60-bit hash (seeded md5 hashes, md5
+        # band keys, Bloom hashes, negative-edge buckets), and
+        # ngram_contamination always broadcasts its eval shingles
+        "bloom_filter_join": _q_bloom_filter_join,
+        "negative_edges": _q_negative_edges,
+        "incremental_dedup": _q_incremental_dedup,
+        "ngram_contamination": _on("documents", "ngram_contamination"),
         # kgspark/bpe.py touched (encode path added)
         "bpe_merges": _q_bpe_merges,
         "bpe_encode": _q_bpe_encode,
@@ -2257,53 +1967,70 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_events_per_user": _q_top_events_per_user,
         "orders_rollup": _q_orders_rollup,
         "active_inactive_customers": _q_active_inactive_customers,
-        "sessionize": _q_sessionize,
+        "sessionize": _on("events", "sessionize", gap_seconds=600),
         "data_quality_report": _q_data_quality_report,
         "corpus_curation": _q_corpus_curation,
         "snapshot_cdc_diff": _q_snapshot_cdc_diff,
         "weighted_sample": _q_weighted_sample,
-        "table_checksum": _q_table_checksum,
-        "bigram_lm_score": _q_bigram_lm_score,
-        "char_entropy": _q_char_entropy,
+        "table_checksum": _on(
+            "orders", "table_checksum",
+            cols=["o_orderkey", "o_custkey", "o_orderstatus",
+                  "o_orderpriority"],
+        ),
+        "bigram_lm_score": _on("documents", "bigram_lm_score"),
+        "char_entropy": _on("documents", "char_entropy"),
         "customer_order_distribution": _q_customer_order_distribution,
-        "scd2_history": _q_scd2_history,
-        "user_value_ewma": _q_user_value_ewma,
-        "event_funnel": _q_event_funnel,
-        "value_moments": _q_value_moments,
         # ================= end of 50-slot driver window =================
         # stable backlog: driver-green in CORRECTNESS_r04.json (the
         # entire r4 window) or r3, code unchanged since; plus remaining
         # rows-only entries (named pytests). All re-verified locally in
         # BENCH/oracle_full_r6.json.
         # driver-green in CORRECTNESS_r05.json, code unchanged since
+        "scd2_history": _on("events", "scd2_history"),
+        "user_value_ewma": _on("events", "ewma_features"),
+        "event_funnel": _on("events", "funnel_stages"),
+        "value_moments": _on("events", "value_moments"),
         "dsir_importance": _q_dsir_importance,
-        "value_equidepth_hist": _q_value_equidepth_hist,
+        "value_equidepth_hist": _on("events", "equidepth_histogram", k=10),
         "fuzzy_vocab_linkage": _q_fuzzy_vocab_linkage,
-        "source_overlap": _q_source_overlap,
-        "per_source_sample": _q_per_source_sample,
-        "value_twap": _q_value_twap,
-        "doc_fingerprint": _q_doc_fingerprint,
-        "token_stats": _q_token_stats,
-        "quality_scores": _q_quality_scores,
-        "lang_id": _q_lang_id,
-        "corpus_filter": _q_corpus_filter,
+        # full-content fingerprints share nothing across sources in this
+        # corpus; 5-token prefixes (the syndication/mirror detector)
+        # make the oracle comparison non-vacuous
+        "source_overlap": _on("documents", "source_overlap", prefix_tokens=5),
+        "per_source_sample": _on("documents", "per_source_sample", k=3),
+        "value_twap": _on("events", "value_twap"),
+        "doc_fingerprint": _on("documents", "fingerprints"),
+        "token_stats": _on("documents", "token_stats"),
+        "quality_scores": _on("documents", "quality_scores"),
+        "lang_id": _on("documents", "lang_id"),
+        "corpus_filter": _on("documents", "corpus_filter"),
         "stratified_sample": _q_stratified_sample,
-        "repetition_stats": _q_repetition_stats,
-        "ngram_contamination": _q_ngram_contamination,
-        "pii_scrub": _q_pii_scrub,
-        "paragraph_dedup": _q_paragraph_dedup,
-        "unigram_lm_score": _q_unigram_lm_score,
-        "quality_classifier": _q_quality_classifier,
+        "repetition_stats": _on("documents", "repetition_stats"),
+        # the corpus is PII-free (counts 0): the oracle checks the shared
+        # regex semantics, the planted-PII pytest carries the behaviour
+        "pii_scrub": _on("documents", "pii_scrub"),
+        # the fixture text has no newlines: 4-word windows are paragraphs
+        "paragraph_dedup": _on(
+            "documents", "paragraph_dedup",
+            min_docs=2, mode="window", words_per_para=4,
+        ),
+        "unigram_lm_score": _on("documents", "unigram_lm_score"),
+        "quality_classifier": _on("documents", "quality_classifier"),
         "value_percentiles": _q_value_percentiles,
         "winnow_fingerprint": _q_winnow_fingerprint,
-        "winnow_near_dup": _q_winnow_near_dup,
+        "winnow_near_dup": _on("documents", "winnow_near_dup"),
         "top_terms": _q_top_terms,
         "ann_cosine_topk": _q_ann_cosine_topk,
         "ann_filtered_topk": _q_ann_filtered_topk,
         "hybrid_fusion_topk": _q_hybrid_fusion,
         "keyword_bm25_topk": _q_keyword_bm25,
         "ngram_jaccard": _q_ngram_jaccard,
-        "simhash_near_dup": _q_simhash_near_dup,
+        # md5 signatures are bit-exact against the DuckDB oracle; the
+        # xxhash64 mode shares every line but the signature kernel and is
+        # pytest-covered for pair-set agreement
+        "simhash_near_dup": _on(
+            "documents", "simhash_near_dup", max_hamming=3, hash_mode="md5"
+        ),
         "embedding_near_dup": _q_embedding_near_dup,
         # same plan as ann_ivf_topk; the key keeps the 118-query set
         "ann_ivf_vectorized_topk": _q_ann_ivf_topk,
@@ -2315,35 +2042,37 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ntile_spend_buckets": _q_ntile_spend_buckets,
         "table_profile": _q_table_profile,
         "min_cost_supplier": _q_min_cost_supplier,
-        "bloom_filter_join": _q_bloom_filter_join,
         "key_skew_stats": _q_key_skew_stats,
         "zorder_cells": _q_zorder_cells,
         "khop_join": _q_khop_join,
-        "source_mix_report": _q_source_mix,
+        "source_mix_report": _on("documents", "source_mix_report"),
         "degree_histogram": _q_degree_histogram,
-        "negative_edges": _q_negative_edges,
         "kg_chunk_stats": _q_kg_chunk_stats,
         "kg_top_connected": _q_kg_top_connected,
         "kg_graphrag_search": _q_kg_graphrag,
         "kg_graphrag_entities": _q_kg_graphrag_entities,
         "kg_graph_stats": _q_kg_graph_stats,
         "approx_distinct_users": _q_approx_distinct,
-        "orders_trailing_window": _q_orders_trailing_window,
+        "orders_trailing_window": _on(
+            "orders", "trailing_window_agg", days=30
+        ),
         "asof_last_view": _q_asof_last_view,
         "events_in_sessions": _q_events_in_sessions,
         "orders_cube": _q_orders_cube,
         "events_pivot": _q_events_pivot,
         "batch_ann_topk": _q_batch_ann_topk,
-        "pack_docs": _q_pack_docs,
+        # the oracle replays the same sequential fold as a recursive CTE
+        "pack_docs": _on(
+            "documents", "pack_sequences", budget=2000, buckets=16
+        ),
         "quantized_embeddings": _q_quantized_embeddings,
         "nfc_fingerprints": _q_nfc_fingerprints,
         "doc_length_histogram": _q_doc_length_histogram,
         "events_json_props": _q_events_json_props,
-        "exact_dedup": _q_exact_dedup,
+        "exact_dedup": _on("documents", "exact_dedup"),
         "streaming_lang_windows": _q_streaming_lang_windows,
         "streaming_sessions": _q_streaming_sessions,
         "streaming_join": _q_streaming_join,
-        "incremental_dedup": _q_incremental_dedup,
         "kg_communities": _q_kg_communities,
     }
 

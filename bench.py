@@ -365,10 +365,12 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
         )
         emb_hd.unpersist()
 
+    # each op consumes one output column: a bare count() of a projection
+    # prunes every computed column and times a zero-column scan
     def text_analysis():
-        lang_id(docs).count()
-        quality_scores(docs).count()
-        token_stats(docs).count()
+        lang_id(docs).agg(F.max("pred_lang")).collect()
+        quality_scores(docs).agg(F.max("stopword_ratio")).collect()
+        token_stats(docs).agg(F.max("n_bpe_pieces")).collect()
 
     timed("text_analysis", text_analysis)
 
@@ -378,8 +380,9 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
     if not skip_extras:
         def corpus_filters():
             repetition_stats(docs).count()
-            ngram_contamination(docs).count()
-            pii_scrub(docs).count()
+            # count() alone drops the eval-side join and the scrub chain
+            ngram_contamination(docs).agg(F.sum("n_contaminated")).collect()
+            pii_scrub(docs).agg(F.max("scrubbed_fingerprint")).collect()
             winnow_near_dup(docs).count()
 
         timed("corpus_filters", corpus_filters)
@@ -451,9 +454,10 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
                 paragraph_dedup, quality_classifier, unigram_lm_score,
             )
 
+            # count() alone drops the anti-join and the reassembly
             paragraph_dedup(
                 docs, min_docs=2, mode="window", words_per_para=4
-            ).count()
+            ).agg(F.max("clean_md5")).collect()
             unigram_lm_score(docs).count()
             quality_classifier(docs).count()
 
@@ -494,7 +498,8 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
                 zipf_slope,
             )
 
-            source_mix_report(docs).count()
+            # count() alone drops the fingerprints: a groupBy source
+            source_mix_report(docs).agg(F.sum("n_unique")).collect()
             source_overlap(docs, prefix_tokens=5).count()
             per_source_sample(docs, k=3).count()
             zipf_slope(docs, top_n=300).collect()

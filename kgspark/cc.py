@@ -611,6 +611,8 @@ def negative_edges(
     leave via left_anti on the canonicalized edge set; the final k is
     a TakeOrderedAndProject on md5(a||b) — an unbiased-within-block,
     auditable draw."""
+    from .dataops import md5_hash60  # noqa: PLC0415
+
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -625,11 +627,7 @@ def negative_edges(
         .distinct()
         .withColumn(
             "bucket",
-            F.pmod(
-                F.conv(F.substring(F.md5(F.col("v").cast("string")), 1, 15),
-                       16, 10).cast("long"),
-                F.lit(n_buckets),
-            ),
+            F.pmod(md5_hash60(F.col("v")), F.lit(n_buckets)),
         )
     )
     x = nodes.select("bucket", F.col("v").alias("a"))

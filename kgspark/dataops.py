@@ -117,9 +117,7 @@ def _seeded_hash64(col, seed: int, hash_mode: str):
     which makes MinHash results oracle-checkable cross-engine."""
     if hash_mode == "xxhash64":
         return F.xxhash64(col, F.lit(seed))
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}|"), col)), 1, 15), 16, 10
-    ).cast("long")
+    return md5_hash60(F.concat(F.lit(f"{seed}|"), col))
 
 
 def _band_sig(cols, band: int, hash_mode: str):
@@ -127,13 +125,9 @@ def _band_sig(cols, band: int, hash_mode: str):
     slice (decimal-rendered in md5 mode, identically in both engines)."""
     if hash_mode == "xxhash64":
         return F.xxhash64(F.lit(band), *cols)
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.lit(str(band)), *[c.cast("string") for c in cols])),
-            1, 15,
-        ),
-        16, 10,
-    ).cast("long")
+    return md5_hash60(
+        F.concat_ws("|", F.lit(str(band)), *[c.cast("string") for c in cols])
+    )
 
 
 def _bucket_pairs(keys: DataFrame) -> DataFrame:
@@ -1005,7 +999,6 @@ def ngram_contamination(
     eval_docs: DataFrame | None = None,
     n: int = 8,
     eval_mod: int = 97,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination by n-gram overlap: flag every training
     document that shares at least one n-word shingle with the held-out
@@ -1016,10 +1009,8 @@ def ngram_contamination(
     Shape: distinct shingles per side (reuses word_shingles, which is
     already per-doc distinct), then a left join keyed on the shingle
     and one hash agg. At 100 TB the eval side is a benchmark suite —
-    MBs, not TBs — so the default broadcast hint removes the shuffle
-    entirely; pass broadcast_eval=False for an eval set too big to
-    broadcast and the join runs as a shuffled hash join on the
-    shingle key (still never all-pairs).
+    MBs, not TBs — so the eval shingle set is always broadcast and
+    the train side is never shuffled for the join.
     """
     if eval_docs is None:
         eval_docs = documents.filter((F.col("doc_id") % eval_mod) == 0)
@@ -1027,9 +1018,7 @@ def ngram_contamination(
     else:
         train_docs = documents
     eval_sh = word_shingles(eval_docs, n=n).select("shingle").distinct()
-    eval_sh = eval_sh.withColumn("__hit", F.lit(1))
-    if broadcast_eval:
-        eval_sh = F.broadcast(eval_sh)
+    eval_sh = F.broadcast(eval_sh.withColumn("__hit", F.lit(1)))
     train_sh = word_shingles(train_docs, n=n)
     hits = (
         train_sh.join(
@@ -1151,7 +1140,9 @@ def winnow_near_dup(
 ) -> DataFrame:
     """Near-duplicate pairs by shared winnowing fingerprints — the
     contiguous-match complement to MinHash: pairs are generated by a
-    bucket join on the fingerprint value, never all-pairs.
+    bucket join on the fingerprint value, never all-pairs. Any common
+    run of >= k + w - 1 words (6 at the defaults) yields at least one
+    shared winnow_fingerprints value; a pair needs min_shared of them.
 
     max_df drops fingerprints occurring in more than that many
     documents before pairing (boilerplate k-grams — the analog of
@@ -1768,11 +1759,7 @@ def _bloom_hash(key_str_col, i: int, m_bits: int):
     """i-th Bloom hash: engine-portable md5/15-hex 64-bit hash of
     key:":i" mod m_bits — same construction as hash_bucket, so the
     whole filter is bit-identical in DuckDB oracle SQL."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(key_str_col, F.lit(f":{i}"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = md5_hash60(F.concat(key_str_col, F.lit(f":{i}")))
     return F.pmod(h, F.lit(m_bits))
 
 
@@ -2958,7 +2945,8 @@ def funnel_stages(
     the whole stream, no per-user event sorting.
 
     Returns one row per stage: (stage_index, stage, n_users,
-    median_hours_from_prev) — the conversion table.
+    median_hours_from_prev) — the conversion table; the median is the
+    exact interpolated percentile.
     """
     stages = stages or ["signup", "view", "purchase"]
     us = ts_micros(events, "ts")
