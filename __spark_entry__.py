@@ -5,7 +5,7 @@ queries()         — one entry per implemented operator (SURVEY.md §2).
 oracle_sql()      — DuckDB-equivalent ANSI SQL for every SQL-expressible
                     query (same column names; computed columns aliased
                     identically on both sides). Non-SQL-expressible ops
-                    (chunker / rule-extractor / minhash / simhash UDF
+                    (chunker / rule-extractor UDF
                     stages) have no oracle entry -> rows-only check,
                     covered instead by the pytest oracle suite
                     (tests/test_pipeline_e2e.py, P/R vs kgspark.oracle).
@@ -1912,6 +1912,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kmeans_inertia": _q_kmeans_inertia,           # also r5-fixed
         "lm_perplexity_buckets": _on("documents", "lm_perplexity_buckets"),
         # ---- 2. added/touched this round ----
+        # one undirected-edge canonicalizer (part_triangles,
+        # part_link_prediction, degree_histogram, negative_edges) and
+        # one power iteration (kg_pagerank, kg_personalized_pagerank)
+        # in kgspark/cc.py; label propagation lost its column options
+        "part_triangles": _q_part_triangles,
+        "part_link_prediction": _q_part_link_prediction,
+        "degree_histogram": _q_degree_histogram,
+        "kg_communities": _q_kg_communities,
+        # one JVM SimHash kernel: hash_mode picks only the per-token
+        # hash, and md5 signatures are bit-exact against the DuckDB
+        # oracle (the xxhash64 mode is pytest-covered for pair-set
+        # agreement)
+        "simhash_near_dup": _on(
+            "documents", "simhash_near_dup", max_hamming=3, hash_mode="md5"
+        ),
+        # one exact cosine top-k (query.vector_topk) under every ANN op
+        "ann_cosine_topk": _q_ann_cosine_topk,
+        "ann_filtered_topk": _q_ann_filtered_topk,
         # r6: one S1->S7 stage definition for build_kg_frames + Pipeline
         "kg_triples": _q_kg_triples,
         "kg_canonical": _q_kg_canonical,
@@ -1969,6 +1987,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "active_inactive_customers": _q_active_inactive_customers,
         "sessionize": _on("events", "sessionize", gap_seconds=600),
         "data_quality_report": _q_data_quality_report,
+        # ================= end of 50-slot driver window =================
+        # stable backlog: driver-green in CORRECTNESS_r04.json (the
+        # entire r4 window) or r3, code unchanged since; plus remaining
+        # rows-only entries (named pytests). All re-verified locally in
+        # BENCH/oracle_full_r6.json.
+        # driver-green in CORRECTNESS_r05.json, code unchanged since
         "corpus_curation": _q_corpus_curation,
         "snapshot_cdc_diff": _q_snapshot_cdc_diff,
         "weighted_sample": _q_weighted_sample,
@@ -1980,12 +2004,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bigram_lm_score": _on("documents", "bigram_lm_score"),
         "char_entropy": _on("documents", "char_entropy"),
         "customer_order_distribution": _q_customer_order_distribution,
-        # ================= end of 50-slot driver window =================
-        # stable backlog: driver-green in CORRECTNESS_r04.json (the
-        # entire r4 window) or r3, code unchanged since; plus remaining
-        # rows-only entries (named pytests). All re-verified locally in
-        # BENCH/oracle_full_r6.json.
-        # driver-green in CORRECTNESS_r05.json, code unchanged since
         "scd2_history": _on("events", "scd2_history"),
         "user_value_ewma": _on("events", "ewma_features"),
         "event_funnel": _on("events", "funnel_stages"),
@@ -2020,24 +2038,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "winnow_fingerprint": _q_winnow_fingerprint,
         "winnow_near_dup": _on("documents", "winnow_near_dup"),
         "top_terms": _q_top_terms,
-        "ann_cosine_topk": _q_ann_cosine_topk,
-        "ann_filtered_topk": _q_ann_filtered_topk,
         "hybrid_fusion_topk": _q_hybrid_fusion,
         "keyword_bm25_topk": _q_keyword_bm25,
         "ngram_jaccard": _q_ngram_jaccard,
-        # md5 signatures are bit-exact against the DuckDB oracle; the
-        # xxhash64 mode shares every line but the signature kernel and is
-        # pytest-covered for pair-set agreement
-        "simhash_near_dup": _on(
-            "documents", "simhash_near_dup", max_hamming=3, hash_mode="md5"
-        ),
         "embedding_near_dup": _q_embedding_near_dup,
         # same plan as ann_ivf_topk; the key keeps the 118-query set
         "ann_ivf_vectorized_topk": _q_ann_ivf_topk,
         "tfidf_top_terms": _q_tfidf_top_terms,
         "dataset_split": _q_dataset_split,
-        "part_triangles": _q_part_triangles,
-        "part_link_prediction": _q_part_link_prediction,
         "small_qty_revenue": _q_small_qty_revenue,
         "ntile_spend_buckets": _q_ntile_spend_buckets,
         "table_profile": _q_table_profile,
@@ -2046,7 +2054,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zorder_cells": _q_zorder_cells,
         "khop_join": _q_khop_join,
         "source_mix_report": _on("documents", "source_mix_report"),
-        "degree_histogram": _q_degree_histogram,
         "kg_chunk_stats": _q_kg_chunk_stats,
         "kg_top_connected": _q_kg_top_connected,
         "kg_graphrag_search": _q_kg_graphrag,
@@ -2073,7 +2080,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_lang_windows": _q_streaming_lang_windows,
         "streaming_sessions": _q_streaming_sessions,
         "streaming_join": _q_streaming_join,
-        "kg_communities": _q_kg_communities,
     }
 
 

@@ -224,13 +224,13 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
     # across rounds.
     skip_extras = os.environ.get("KGSPARK_BENCH_SKIP_EXTRAS") == "1"
 
-    # md5 mode = the oracle-checked kernel (pandas UDF); xxh mode = the
-    # fully-JVM production kernel — timed apart to quantify the gap.
+    # One JVM SimHash kernel, two per-token hashes: md5 mode = the
+    # oracle-checked hash (conv over md5 hex); xxh mode = the production
+    # hash (xxhash64) — timed apart to quantify the gap.
     # The fixture docs are tiny (~30 tokens), so the near-dup segments
     # mostly measure the banding join; the *_sig_heavy segments run the
     # signature kernel alone on 20x-repeated text (~600 tokens/doc, a
-    # realistic web-page size) where the per-token cost dominates —
-    # that is where the JVM kernel's advantage shows.
+    # realistic web-page size) where the per-token hash cost dominates.
     timed(
         "simhash_near_dup",
         lambda: simhash_near_dup(docs, hash_mode="md5").count(),
@@ -379,7 +379,8 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
     # scaling knob like every r3-new segment)
     if not skip_extras:
         def corpus_filters():
-            repetition_stats(docs).count()
+            # count() alone drops the bigram pass behind dup_bigram_frac
+            repetition_stats(docs).agg(F.max("dup_bigram_frac")).collect()
             # count() alone drops the eval-side join and the scrub chain
             ngram_contamination(docs).agg(F.sum("n_contaminated")).collect()
             pii_scrub(docs).agg(F.max("scrubbed_fingerprint")).collect()
@@ -458,8 +459,9 @@ def run_bench(sf_dir: str, cpus: int, n_pages: int | None = None) -> dict:
             paragraph_dedup(
                 docs, min_docs=2, mode="window", words_per_para=4
             ).agg(F.max("clean_md5")).collect()
-            unigram_lm_score(docs).count()
-            quality_classifier(docs).count()
+            # and the log-probability / weight sums behind these columns
+            unigram_lm_score(docs).agg(F.max("avg_neg_logp")).collect()
+            quality_classifier(docs).agg(F.max("quality_prob")).collect()
 
         timed("corpus_cleaning", corpus_cleaning)
 

@@ -144,56 +144,41 @@ def connected_components(
     return labels.select("name", F.col("comp").alias("canonical_id"))
 
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 10,
-    src: str = "src",
-    dst: str = "dst",
-    return_prev: bool = False,
-) -> DataFrame:
-    """Distributed PageRank by power iteration over DataFrames — the
-    companion graph-analytics op to connected_components, same
-    iterative discipline: every round is one join + one hash agg, with
-    `localCheckpoint(eager=True)` truncating lineage so the plan stays
-    O(1) per round instead of re-deriving the whole history.
+def _undirected(edges: DataFrame) -> DataFrame:
+    """(src, dst) -> distinct undirected (a, b) rows with a < b and no
+    self-loops: the one canonical edge set of the undirected ops."""
+    return (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+        )
+        .distinct()
+    )
 
-    Semantics: standard damped PageRank with dangling-mass
-    redistribution — rank(v) = (1-d)/N + d*(sum of rank(u)/outdeg(u)
-    over in-neighbours u + dangling_mass/N); ranks sum to 1 every
-    iteration. Fixed iteration count and zero per-round driver
-    actions: the scalar dangling mass stays in the plan as a
+
+def _power_iteration(
+    e: DataFrame, nodes: DataFrame, damping: float, iterations: int
+) -> tuple[DataFrame, DataFrame]:
+    """Damped power iteration with teleport vector t over e(src, dst)
+    and a checkpointed nodes(node, t) frame: rank = (1-d)*t +
+    d*(in-contributions + dangling_mass*t), starting from rank = t.
+    Ranks sum to 1 every iteration.
+
+    Every round is one join (on src) + one hash agg (on dst) with
+    `localCheckpoint(eager=True)` truncating lineage, so the plan stays
+    O(1) per round. The scalar dangling mass stays in the plan as a
     broadcast 1-row cross join, so each round is exactly one job (the
-    eager checkpoint).
-
-    At 100 TB-scale graphs: the join shuffles on src and the agg on
-    dst — the same two exchanges per round as any power iteration;
-    hot (high-in-degree) nodes concentrate only their AGG key, which
+    eager checkpoint) and zero driver actions; the teleport column
+    rides on the node table, so personalization adds no shuffle. Hot
+    (high-in-degree) nodes concentrate only their agg key, which
     partial aggregation absorbs map-side.
 
-    With `return_prev=True` the result carries a `rank_prev` column —
-    the penultimate iterate — so a caller can read the convergence
-    delta from ONE run instead of re-running the whole iteration at
-    k-1. Free: every iterate is already an eagerly-checkpointed frame,
-    so holding the previous one is a reference, not extra compute.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        out = nodes.withColumn("rank", F.lit(0.0))
-        return (
-            out.withColumn("rank_prev", F.col("rank"))
-            if return_prev else out
-        )
+    Returns (ranks, prev): the final and the penultimate iterate, both
+    (node, rank). Every iterate is already a checkpointed frame, so
+    holding the previous one is a reference, not extra compute."""
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
+    ranks = nodes.select("node", "t", F.col("t").alias("rank"))
     prev = ranks
     for _ in range(iterations):
         prev = ranks
@@ -214,23 +199,60 @@ def pagerank(
             .crossJoin(F.broadcast(dangling))
             .select(
                 "node",
+                "t",
                 (
-                    F.lit(base)
+                    F.lit(1.0 - damping) * F.col("t")
                     + F.lit(damping)
                     * (
                         F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("__dangling") / F.lit(float(n))
+                        + F.col("__dangling") * F.col("t")
                     )
                 ).alias("rank"),
             )
             .localCheckpoint(eager=True)
         )
+    return ranks.select("node", "rank"), prev.select("node", "rank")
+
+
+def pagerank(
+    edges: DataFrame,
+    damping: float = 0.85,
+    iterations: int = 10,
+    return_prev: bool = False,
+) -> DataFrame:
+    """Distributed PageRank over a (src, dst) edge frame — the
+    companion graph-analytics op to connected_components: the
+    power iteration of `_power_iteration` with the uniform teleport
+    vector t = 1/N, i.e. standard damped PageRank with dangling-mass
+    redistribution, rank(v) = (1-d)/N + d*(sum of rank(u)/outdeg(u)
+    over in-neighbours u + dangling_mass/N). Fixed iteration count.
+
+    With `return_prev=True` the result carries a `rank_prev` column —
+    the penultimate iterate — so a caller can read the convergence
+    delta from ONE run instead of re-running the whole iteration at
+    k-1.
+    """
+    e = edges.select("src", "dst")
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    n = nodes.count()
+    if n == 0:
+        out = nodes.withColumn("rank", F.lit(0.0))
+        return (
+            out.withColumn("rank_prev", F.col("rank"))
+            if return_prev else out
+        )
+    ranks, prev = _power_iteration(
+        e, nodes.withColumn("t", F.lit(1.0 / n)), damping, iterations
+    )
     if return_prev:
         # both frames are checkpointed and keyed by the same `nodes`
         # set, so this is one equi-join on identical key domains
-        return ranks.join(
-            prev.select("node", F.col("rank").alias("rank_prev")), "node"
-        )
+        return ranks.join(prev.withColumnRenamed("rank", "rank_prev"), "node")
     return ranks
 
 
@@ -258,22 +280,18 @@ def co_order_pairs(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Distributed triangle counting over an undirected edge list —
     the third classic graph-analytics op next to connected_components
     and pagerank (clustering-coefficient numerator, community-density
     signal over the constructed KG).
 
-    Input edges are canonicalized (undirected, self-loops dropped,
-    deduped). Each edge is then oriented from its lower-(degree, id)
-    endpoint to the higher one, so every node's out-degree is
-    O(sqrt(|E|)) — the standard bound that caps the per-node fanout
-    even on power-law graphs, where id-ordering would let one hub
-    generate O(deg^2) wedges.
+    Input (src, dst) edges are canonicalized by `_undirected`. Each
+    edge is then oriented from its lower-(degree, id) endpoint to the
+    higher one, so every node's out-degree is O(sqrt(|E|)) — the
+    standard bound that caps the per-node fanout even on power-law
+    graphs, where id-ordering would let one hub generate O(deg^2)
+    wedges.
 
     Counting is edge-iterator: build per-node sorted out-adjacency
     arrays, join each oriented edge to its endpoints' arrays, count =
@@ -285,15 +303,7 @@ def triangle_count(
 
     Returns one row: (n_nodes, n_edges, n_triangles).
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges).localCheckpoint(eager=True)
     n_edges = und.count()
     nodes = und.select(F.col("a").alias("v")).union(
         und.select(F.col("b").alias("v"))
@@ -336,12 +346,7 @@ def triangle_count(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    iterations: int = 10,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
     """Synchronous label-propagation community detection — the
     lightweight communities op completing the graph-analytics set
     (connected_components finds REACHABILITY; LPA finds DENSITY
@@ -362,7 +367,8 @@ def label_propagation(
 
     Returns (node, label); nodes sharing a label form a community.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+    # repeated edges are repeated votes, so no _undirected dedup here
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).filter(
         F.col("a") != F.col("b")
     )
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -404,23 +410,17 @@ def personalized_pagerank(
     sources: list,
     damping: float = 0.85,
     iterations: int = 10,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
-    """Personalized PageRank: random walks restart at the SOURCE set
-    instead of uniformly — 'importance relative to these entities',
-    the principled ranking behind a KG's "related to X" surface (the
-    k-hop traversal returns the neighborhood; PPR orders it).
+    """Personalized PageRank over a (src, dst) edge frame: random walks
+    restart at the SOURCE set instead of uniformly — 'importance
+    relative to these entities', the principled ranking behind a KG's
+    "related to X" surface (the k-hop traversal returns the
+    neighborhood; PPR orders it).
 
-    Semantics: teleport vector t = 1/|S| on sources, 0 elsewhere;
-    rank = (1-d)*t + d*(in-contributions + dangling_mass*t); ranks
-    sum to 1 every iteration. Same per-round shape and discipline as
-    pagerank (join on src, agg on dst, eager checkpoint, scalar
-    dangling mass as a broadcast 1-row cross join); the teleport
-    column rides on the node table, so personalization adds zero
-    extra shuffles.
+    The power iteration of `_power_iteration` with teleport vector
+    t = 1/|S| on sources, 0 elsewhere. Returns (node, rank).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -438,47 +438,11 @@ def personalized_pagerank(
         .select("node", F.coalesce("t", F.lit(0.0)).alias("t"))
         .localCheckpoint(eager=True)
     )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ranks = nodes.select("node", "t", F.col("t").alias("rank"))
-    for _ in range(iterations):
-        with_deg = ranks.join(
-            outdeg, ranks["node"] == outdeg["src"], "left"
-        ).select("node", "rank", "outdeg")
-        dangling = with_deg.filter(F.col("outdeg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling")
-        )
-        contribs = (
-            e.join(with_deg, e["src"] == with_deg["node"])
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "t",
-                (
-                    F.lit(1.0 - damping) * F.col("t")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("__dangling") * F.col("t")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select("node", "rank")
+    return _power_iteration(e, nodes, damping, iterations)[0]
 
 
 def adamic_adar(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_deg: int | None = None,
-    k: int = 20,
+    edges: DataFrame, max_deg: int | None = None, k: int = 20
 ) -> DataFrame:
     """Adamic-Adar link prediction over an undirected edge list: for
     every non-adjacent pair (a, b), score = sum over common neighbors
@@ -488,9 +452,9 @@ def adamic_adar(
     suggestion over the constructed KG, co-purchase prediction over
     the order graph).
 
-    Scale shape: edges canonicalize + dedup once; the neighbor table
-    self-joins on the SHARED NEIGHBOR — so fanout is sum(deg(n)^2),
-    the wedge count, never all-pairs over nodes. `max_deg` caps hub
+    Scale shape: (src, dst) edges canonicalize once (`_undirected`);
+    the neighbor table self-joins on the SHARED NEIGHBOR — so fanout
+    is sum(deg(n)^2), the wedge count, never all-pairs over nodes. `max_deg` caps hub
     fanout (on power-law graphs one celebrity node otherwise emits
     deg^2 wedges; its per-wedge contribution 1/ln(deg) is the
     smallest anyway, so the cap trims the noisiest, cheapest signal —
@@ -508,15 +472,7 @@ def adamic_adar(
 
     Returns k rows: (src, dst, n_common, aa_score), src < dst.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges).localCheckpoint(eager=True)
     nbr = und.select(F.col("a").alias("v"), F.col("b").alias("n")).union(
         und.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )
@@ -546,34 +502,26 @@ def adamic_adar(
     fresh = cand.join(und, ["a", "b"], "left_anti")
     return (
         fresh.select(
-            F.col("a").alias(src),
-            F.col("b").alias(dst),
+            F.col("a").alias("src"),
+            F.col("b").alias("dst"),
             "n_common",
             F.round("aa", 6).alias("aa_score"),
         )
-        .orderBy(F.col("aa_score").desc(), src, dst)
+        .orderBy(F.col("aa_score").desc(), "src", "dst")
         .limit(k)
     )
 
 
-def degree_histogram(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def degree_histogram(edges: DataFrame) -> DataFrame:
     """Log2-bucketed degree distribution of an undirected graph — the
     power-law diagnostic behind every skew decision in this engine
     (hub caps, salting thresholds, AQE skew-join expectations): bucket
     b holds nodes with degree in [2^b, 2^(b+1)).
 
-    One edge canonicalize + one degree agg + one tiny bucket agg —
-    all map-side-combinable; output is O(log max_degree) rows."""
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-    )
+    One `_undirected` pass over (src, dst) edges + one degree agg + one
+    tiny bucket agg — all map-side-combinable; output is O(log
+    max_degree) rows."""
+    und = _undirected(edges)
     nbr = und.select(F.col("a").alias("v")).union(
         und.select(F.col("b").alias("v"))
     )
@@ -592,11 +540,7 @@ def degree_histogram(
 
 
 def negative_edges(
-    edges: DataFrame,
-    k: int = 50,
-    src: str = "src",
-    dst: str = "dst",
-    n_buckets: int = 64,
+    edges: DataFrame, k: int = 50, n_buckets: int = 64
 ) -> DataFrame:
     """Deterministic negative sampling for link-prediction / embedding
     training: k node pairs that are NOT edges, drawn reproducibly (no
@@ -613,14 +557,7 @@ def negative_edges(
     auditable draw."""
     from .dataops import md5_hash60  # noqa: PLC0415
 
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-    )
+    und = _undirected(edges)
     nodes = (
         und.select(F.col("a").alias("v"))
         .union(und.select(F.col("b").alias("v")))
@@ -643,7 +580,7 @@ def negative_edges(
     )
     return (
         cand.select(
-            F.col("a").alias(src), F.col("b").alias(dst),
+            F.col("a").alias("src"), F.col("b").alias("dst"),
             pick.alias("draw_key"),
         )
         .orderBy("draw_key")

@@ -281,23 +281,36 @@ def near_dup_clusters(
 
 
 # ---------------------------------------------------------------------------
-# SimHash near-dup (Arrow-batched pandas UDF for the bit packing)
+# SimHash near-dup
 # ---------------------------------------------------------------------------
 
-def _simhash_jvm(documents: DataFrame) -> DataFrame:
-    """Fully-JVM 64-bit SimHash: explode word tokens -> xxhash64 per
-    token -> 64 bit-vote sums in ONE hash aggregate (map-side partial
-    agg collapses hot docs' tokens locally) -> sign-bit signature. No
-    Python anywhere — the production mode; the md5 pandas path stays
-    for bit-exact cross-engine oracle checks.
+def simhash(documents: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
+    r"""64-bit SimHash over word tokens, entirely JVM-side: explode
+    tokens -> 64-bit hash per token -> 64 bit-vote sums in ONE hash
+    aggregate (map-side partial agg collapses hot docs' tokens
+    locally) -> sign-bit signature. Returns (doc_id, simhash).
+
+    Tokens are the lowercased text split on `[ \t\n\f\r]+` — the
+    `\s` class of the DuckDB (RE2) oracle; Java's `\s` also splits on
+    U+000B and Python's str.split() on NBSP, U+0085, U+2028 and
+    U+001C-U+001F, so neither is used. hash_mode picks the per-token
+    hash: "xxhash64" (production) or "md5" — the first 8 md5 bytes as a
+    signed big-endian long, bit-identical to the oracle's
+    ('0x'||substr(md5,1,16))::UBIGINT, which is what the driver's
+    correctness gate checks.
 
     Zero-token docs get all-ones signatures (votes coalesce to 0 and
-    0 >= 0 sets every bit), identical to the md5-mode convention."""
+    0 >= 0 sets every bit)."""
     toks = documents.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
+        F.explode(
+            F.split(F.lower(F.col("text")), r"[ \t\n\f\r]+")
+        ).alias("tok"),
     ).filter(F.col("tok") != "")
-    h = F.xxhash64("tok")
+    h = (
+        F.xxhash64("tok") if hash_mode == "xxhash64"
+        else F.conv(F.substring(F.md5("tok"), 1, 16), 16, -10).cast("bigint")
+    )
     votes = toks.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -324,51 +337,13 @@ def _simhash_jvm(documents: DataFrame) -> DataFrame:
     )
 
 
-def simhash(
-    documents: DataFrame, bits: int = 64, hash_mode: str = "xxhash64"
-) -> DataFrame:
-    """64-bit SimHash over word tokens. hash_mode="xxhash64" (default)
-    is the production path: token hash + bit votes entirely JVM-side.
-    hash_mode="md5" hashes per token with md5 inside an Arrow-batched
-    pandas UDF — slower, but bit-identical to a DuckDB SQL oracle
-    (('0x'||substr(md5,1,16))::UBIGINT), which is what the driver's
-    correctness gate checks."""
-    if hash_mode == "xxhash64":
-        if bits != 64:
-            raise ValueError("JVM simhash supports bits=64 only")
-        return _simhash_jvm(documents)
-    import numpy as np  # noqa: PLC0415
-
-    @F.pandas_udf("long")
-    def simhash_udf(texts: pd.Series) -> pd.Series:
-        import hashlib  # noqa: PLC0415
-
-        out = []
-        for t in texts:
-            votes = np.zeros(bits, dtype=np.int64)
-            for tok in (t or "").lower().split():
-                d = hashlib.md5(tok.encode("utf-8")).digest()
-                h = int.from_bytes(d[:8], "big")
-                bs = np.unpackbits(
-                    np.frombuffer(h.to_bytes(8, "big"), dtype=np.uint8)
-                ).astype(np.int64)
-                votes += 2 * bs - 1
-            sig = 0
-            for b in votes >= 0:
-                sig = (sig << 1) | int(b)
-            out.append(sig - (1 << bits) if sig >= (1 << (bits - 1)) else sig)
-        return pd.Series(out, dtype="int64")
-
-    return documents.select("doc_id", simhash_udf(F.col("text")).alias("simhash"))
-
-
 def simhash_near_dup(
     documents: DataFrame, max_hamming: int = 3, hash_mode: str = "xxhash64"
 ) -> DataFrame:
     """SimHash blocking: split the 64-bit signature into max_hamming+1
     16-bit bands — any pair within the Hamming radius shares at least
     one exact band (pigeonhole). Band-bucket join + exact popcount check.
-    hash_mode picks the signature kernel (see simhash)."""
+    hash_mode picks the per-token hash (see simhash)."""
     sh = simhash(documents, hash_mode=hash_mode).localCheckpoint(eager=True)
     n_bands = max_hamming + 1
     band_width = 64 // n_bands
@@ -418,15 +393,9 @@ def brute_force_ann(
 ) -> DataFrame:
     """Baseline ANN: exact cosine top-k over the full table
     (TakeOrderedAndProject; one narrow scan)."""
-    from .query import cosine_score  # noqa: PLC0415
+    from .query import vector_topk  # noqa: PLC0415
 
-    return (
-        embeddings.select(
-            "vec_id", cosine_score(F.col("embedding"), query_vec).alias("score")
-        )
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(k)
-    )
+    return vector_topk(embeddings, query_vec, k, id_col="vec_id")
 
 
 def _unit_rows(mat):
@@ -511,17 +480,13 @@ def ivf_ann(
     driver (tiny), then exact cosine only inside the n_probe nearest
     cells. Partition-prunable when the assignment table is written
     partitioned by cell."""
+    from .query import vector_topk  # noqa: PLC0415
+
     probe = _probe_cells(centroids, query_vec, n_probe)
     assigned = ivf_assign(embeddings, centroids)
-    from .query import cosine_score  # noqa: PLC0415
-
-    return (
-        assigned.filter(F.col("cell").isin(probe))
-        .select(
-            "vec_id", cosine_score(F.col("embedding"), query_vec).alias("score")
-        )
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(k)
+    return vector_topk(
+        assigned.filter(F.col("cell").isin(probe)), query_vec, k,
+        id_col="vec_id",
     )
 
 
@@ -571,18 +536,14 @@ def ivf_query(
     tiny), then exact cosine top-k over ONLY those cells. The cell
     filter is a partition filter on the index's layout, so the scan
     reads n_probe/n_cells of the data — the 100 TB path."""
-    from .query import cosine_score  # noqa: PLC0415
+    from .query import vector_topk  # noqa: PLC0415
 
     cents = io.snapshot_metadata(table, snapshot)["centroids"]
     probe = _probe_cells(cents, query_vec, n_probe)
     assigned = io.read(spark, table, snapshot)
-    return (
-        assigned.filter(F.col("cell").isin(probe))
-        .select(
-            "vec_id", cosine_score(F.col("embedding"), query_vec).alias("score")
-        )
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(k)
+    return vector_topk(
+        assigned.filter(F.col("cell").isin(probe)), query_vec, k,
+        id_col="vec_id",
     )
 
 
@@ -2833,21 +2794,14 @@ def filtered_ann(
     allowed set is typically a dimension-sized id list (broadcast) or
     a partition-pruned scan. One narrow scan + TakeOrderedAndProject,
     same as brute_force_ann."""
-    from .query import cosine_score  # noqa: PLC0415
+    from .query import vector_topk  # noqa: PLC0415
 
     cand = embeddings.join(
         allowed.select(F.col(allowed.columns[0]).alias(id_col)),
         id_col,
         "left_semi",
     )
-    return (
-        cand.select(
-            id_col,
-            cosine_score(F.col("embedding"), query_vec).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    return vector_topk(cand, query_vec, k, id_col=id_col)
 
 
 def curate_corpus(

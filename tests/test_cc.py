@@ -304,6 +304,23 @@ def test_personalized_pagerank_matches_reference(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
+def test_personalized_pagerank_all_sources_is_pagerank(spark):
+    """Teleporting uniformly to every node is global PageRank: one
+    power iteration serves both, dangling mass included."""
+    from kgspark.cc import pagerank, personalized_pagerank
+
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("d", "a")]  # c dangles
+    e = spark.createDataFrame(edges, "src string, dst string")
+    pr = {r["node"]: r["rank"] for r in pagerank(e).collect()}
+    ppr = {
+        r["node"]: r["rank"]
+        for r in personalized_pagerank(e, list("abcd")).collect()
+    }
+    assert set(ppr) == set(pr)
+    for v in pr:
+        assert abs(ppr[v] - pr[v]) < 1e-12
+
+
 def test_personalized_pagerank_localizes_mass(spark):
     from kgspark.cc import personalized_pagerank
 
@@ -321,11 +338,12 @@ def test_personalized_pagerank_localizes_mass(spark):
 def test_adamic_adar_hand_computed(spark):
     # path graph 1-2-3-4: candidates are (1,3) via neighbor 2 and
     # (2,4) via neighbor 3; both shared neighbors have degree 2, so
-    # both pairs score exactly 1/ln(2). (1,4) shares no neighbor.
+    # both pairs score exactly 1/ln(2). (1,4) shares no neighbor. The
+    # self-loop and the reversed duplicate canonicalize away.
     from kgspark.cc import adamic_adar
 
     e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "src long, dst long"
+        [(1, 2), (2, 3), (3, 4), (3, 3), (2, 1)], "src long, dst long"
     )
     got = {
         (r["src"], r["dst"]): (r["n_common"], r["aa_score"])
@@ -398,12 +416,12 @@ def test_degree_histogram_hand_computed(spark):
 def test_negative_edges_are_nonedges_and_deterministic(spark):
     from kgspark.cc import negative_edges
 
-    e = spark.createDataFrame(
-        [(i, (i + 1) % 12) for i in range(12)], "src long, dst long"
-    )  # 12-ring: 54 non-edges exist
+    ring = [(i, (i + 1) % 12) for i in range(12)]  # 54 non-edges exist
+    # a self-loop and a reversed duplicate canonicalize away
+    e = spark.createDataFrame(ring + [(5, 5), (1, 0)], "src long, dst long")
     got = negative_edges(e, k=10, n_buckets=4).collect()
     assert len(got) == 10
-    edges = {(min(a, b), max(a, b)) for a, b in [(i, (i + 1) % 12) for i in range(12)]}
+    edges = {(min(a, b), max(a, b)) for a, b in ring}
     pairs = {(r["src"], r["dst"]) for r in got}
     assert all(a < b for a, b in pairs)
     assert not (pairs & edges)
@@ -412,6 +430,11 @@ def test_negative_edges_are_nonedges_and_deterministic(spark):
         for r in negative_edges(e, k=10, n_buckets=4).collect()
     }
     assert again == pairs
+    plain = spark.createDataFrame(ring, "src long, dst long")
+    assert {
+        (r["src"], r["dst"])
+        for r in negative_edges(plain, k=10, n_buckets=4).collect()
+    } == pairs
 
 
 def test_pagerank_return_prev_matches_separate_run(spark):

@@ -138,6 +138,50 @@ def test_simhash_jvm_mode_agrees_with_md5_mode(spark, docs):
     assert "EvalPython" not in plan
 
 
+def test_simhash_md5_matches_oracle_on_unicode_whitespace(spark):
+    """The md5 signatures equal the DuckDB oracle's `usig` (read as
+    signed) on text separated by characters the tokenizers disagree
+    on: Python's str.split() splits on NBSP, U+0085, U+2028 and
+    U+001C, Java's \\s on U+000B, RE2's \\s on none of them. The md5
+    plan is JVM-only (no Python eval node)."""
+    import random
+
+    import duckdb
+
+    import __spark_entry__ as em
+
+    rng = random.Random(11)
+    words = ["alpha", "Beta", "gamma", "delta", "eps", "zeta", "eta"]
+    seps = [" ", "\t", "\u00a0", "\u2028", "\u001c", "\u0085", "\u000b",
+            "  ", "\t\n"]
+    rows = [
+        (i, "".join(
+            rng.choice(words) + rng.choice(seps)
+            for _ in range(rng.randint(1, 12))
+        ))
+        for i in range(40)
+    ] + [(40, ""), (41, " \t ")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sig = dataops.simhash(df, hash_mode="md5")
+    got = {r["doc_id"]: r["simhash"] for r in sig.collect()}
+
+    sql = em._simhash_sql(3)
+    sql = sql[:sql.index("banded AS (")].rstrip().rstrip(",")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = {
+        d: u - (1 << 64) if u >= (1 << 63) else u
+        for d, u in con.execute(
+            sql + " SELECT doc_id, usig FROM sigs"
+        ).fetchall()
+    }
+    assert got == want
+    assert got[40] == got[41] == -1
+    plan = sig._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan
+
+
 def test_ivf_ann_matches_brute_force_topk(spark):
     import random
 
